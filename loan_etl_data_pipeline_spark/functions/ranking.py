@@ -60,6 +60,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
+from loan_etl_data_pipeline_spark.session import pin
+
 _MID_BITS = 33  # monotonically_increasing_id: row position bits
 _MID_MASK = (1 << _MID_BITS) - 1
 
@@ -99,6 +101,12 @@ def _exclusive_offsets(
       two parts add via a broadcast join on the block id. Fan-out is
       O(nparts·√nparts), not O(nparts²), which is what "bounded at any
       data scale" actually requires at a 100k-core cluster.
+
+    Output rows: ≤ 256 partitions yields one row for every id in
+    ``[0, nparts)`` (when ``counts`` is non-empty); above 256 it yields
+    rows only for ids in blocks that hold at least one ``counts`` row.
+    Either way every id that has a ``counts`` row gets its offset, which
+    is all the consumers' inner joins on ``__pid`` read.
     """
     # the exploded target id gets its own name; referencing the child's
     # ``__pid`` under an identically-named generator output worked only
@@ -217,15 +225,15 @@ def global_rank(
     intermittently corrupted ranks in multi-column consumers). The
     cache pins both branches to one shuffle; a cached partition lost
     to eviction recomputes from the already-written shuffle files, so
-    the boundaries can never re-sample. Attached as
-    ``_persisted_intermediates`` (release_intermediates /
-    clearCache to free).
+    the boundaries can never re-sample. Pinned in the caller's
+    ``session.intermediates()`` scope (clearCache frees it when none is
+    open); close that scope only after the result is materialized.
     """
     from pyspark import StorageLevel
 
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    shuffled = df.repartitionByRange(nparts, *order_by).persist(
-        StorageLevel.MEMORY_AND_DISK
+    shuffled = pin(
+        df.repartitionByRange(nparts, *order_by), StorageLevel.MEMORY_AND_DISK
     )
     ranged = shuffled.sortWithinPartitions(*order_by).withColumn(
         "__mid", F.monotonically_increasing_id()
@@ -243,7 +251,6 @@ def global_rank(
         out = out.withColumn(total_col, F.col("__n").cast("bigint"))
         keep.append(total_col)
     out = out.select(*keep)
-    out._persisted_intermediates = [shuffled]
     return out
 
 
@@ -326,8 +333,8 @@ def global_cumsum_multi(
             )
     names = _names or {c: c + suffix for c in value_cols}
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    shuffled = df.repartitionByRange(nparts, *order_by).persist(
-        StorageLevel.MEMORY_AND_DISK
+    shuffled = pin(
+        df.repartitionByRange(nparts, *order_by), StorageLevel.MEMORY_AND_DISK
     )
     ranged = shuffled.withColumn("__pid", F.spark_partition_id())
     totals = (
@@ -364,7 +371,6 @@ def global_cumsum_multi(
             ).cast("bigint"),
         )
     out = out.select(*(list(df.columns) + [names[c] for c in value_cols]))
-    out._persisted_intermediates = [shuffled]
     return out
 
 
@@ -493,8 +499,4 @@ def quantile_normalize(
         F.col("__v").alias(value_col),
         F.col("__pv").alias(out_col),
     )
-    out._persisted_intermediates = [
-        *getattr(src_ranked, "_persisted_intermediates", ()),
-        *getattr(pooled, "_persisted_intermediates", ()),
-    ]
     return out

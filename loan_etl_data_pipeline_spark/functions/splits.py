@@ -316,8 +316,8 @@ def epoch_shuffle(
     stage stays fully parallel. Re-roll an epoch by changing ``salt``
     ("epoch0", "epoch1", ...); assignments are a pure function of the
     id, so the same corpus shuffles identically on any cluster.
-    release_intermediates(result) once materialized (global_rank
-    persists its ranged intermediate).
+    global_rank pins its ranged intermediate: materialize the result
+    before the caller's ``session.intermediates()`` scope closes.
     """
     from loan_etl_data_pipeline_spark.functions.ranking import global_rank
 
@@ -329,11 +329,9 @@ def epoch_shuffle(
         [F.col("__shufkey").asc(), F.col(id_col).asc()],
         rank_col="pos",
     )
-    out = ranked.withColumn(
+    return ranked.withColumn(
         "shard", ((F.col("pos") - 1) % n_shards).cast("bigint")
     ).drop("__shufkey")
-    out._persisted_intermediates = getattr(ranked, "_persisted_intermediates", [])
-    return out
 
 
 def token_budget_select(
@@ -500,17 +498,9 @@ def curriculum_tiles(
         rank_col="__rank",
         total_col="__nt_total",
     )
-    out = ranked.withColumn(
+    return ranked.withColumn(
         tile_col, ntile_from_rank(F.col("__rank"), F.col("__nt_total"), n_tiles)
     ).drop("__rank", "__nt_total")
-    # global_rank still persists its range-shuffled frame (the boundary
-    # -consistency anchor); forward the handle so release_intermediates
-    # on the tile output actually frees it (ADVICE r8: the empty list
-    # made the corpus path leak a data-sized cache per call)
-    out._persisted_intermediates = list(
-        getattr(ranked, "_persisted_intermediates", ())
-    )
-    return out
 
 
 def negative_samples(

@@ -26,20 +26,7 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from loan_etl_data_pipeline_spark.operators.text import normalize_text, tokens
-
-
-def release_intermediates(df: DataFrame) -> None:
-    """Unpersist the cached intermediates backing an operator result.
-
-    ``ngram_jaccard_pairs`` and ``minhash_near_duplicates`` persist()
-    their postings/signature frames (referenced 2-3× by the returned
-    plan); Spark has no expression-scoped cache, so the blocks live
-    until the session ends unless released. Call this once the result
-    has been fully materialized (collected/written). No-op for frames
-    without registered intermediates.
-    """
-    for cached in getattr(df, "_persisted_intermediates", ()):
-        cached.unpersist()
+from loan_etl_data_pipeline_spark.session import pin
 
 
 def dedup_exact(
@@ -165,10 +152,10 @@ def ngram_jaccard_pairs(
     # join on the 8-byte gram hash, not the gram string — same pairs
     # (collisions only shave Jaccard by ~n_grams²/2⁶⁴), much smaller
     # shuffle rows; at corpus scale the string never leaves the scan
-    posts = (
-        word_ngrams(df, id_col, text_col, n)
-        .select("id", F.xxhash64("ngram").alias("gh"))
-        .persist()
+    posts = pin(
+        word_ngrams(df, id_col, text_col, n).select(
+            "id", F.xxhash64("ngram").alias("gh")
+        )
     )
     sizes = posts.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = posts.select(F.col("id").alias("id_a"), "gh")
@@ -190,7 +177,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "inter_size", "size_a", "size_b", "jaccard")
     )
-    out._persisted_intermediates = [posts]  # release_intermediates(out)
     return out
 
 
@@ -265,14 +251,13 @@ def prefix_jaccard_pairs(
     # elements travel as xxhash64 bigints, not strings (same stance as
     # ngram_jaccard_pairs: collisions only inflate Jaccard by
     # ~|set|²/2⁶⁴, the exchanges shrink ~10×); the set table is
-    # persisted because four plan branches read it (postings, df-rank
-    # join, and both verify sides) — release via
-    # release_intermediates(result)
+    # pinned because four plan branches read it (postings, df-rank
+    # join, and both verify sides)
     hashed = F.transform(F.array_distinct(items), lambda s: F.xxhash64(s))
-    sets = (
-        df.select(F.col(id_col).alias("id"), hashed.alias("toks"))
-        .filter(F.size("toks") > 0)
-        .persist()
+    sets = pin(
+        df.select(F.col(id_col).alias("id"), hashed.alias("toks")).filter(
+            F.size("toks") > 0
+        )
     )
     posts = sets.select("id", F.explode("toks").alias("tok"))
     dfreq = posts.groupBy("tok").agg(F.count(F.lit(1)).alias("dfc"))
@@ -289,7 +274,11 @@ def prefix_jaccard_pairs(
     # only be exact while num·|x|+den−1 < 2^53)
     w_pos = Window.partitionBy("id").orderBy("dfc", "tok")
     w_all = Window.partitionBy("id")
-    prefix = (
+    # pinned: the candidate self-join reads the prefix twice and plain
+    # exchange reuse does not survive the per-side projections
+    # (measured: the whole dfreq-join-window subtree planned and ran
+    # TWICE pre-r9)
+    prefix = pin(
         posts.join(dfreq, "tok")
         .select(
             "id",
@@ -303,11 +292,6 @@ def prefix_jaccard_pairs(
             - F.expr(f"int(({num} * sz + {den - 1}) div {den})")
             + 1
         )
-        # persisted: the candidate self-join reads the prefix twice and
-        # plain exchange reuse does not survive the per-side projections
-        # (measured: the whole dfreq-join-window subtree planned and ran
-        # TWICE pre-r9); released via release_intermediates(result)
-        .persist()
     )
     # PPJoin positional filter (Xiao et al. WWW'08 §3.2): for the pair's
     # FIRST shared prefix token at sorted positions (pa, pb), every
@@ -382,7 +366,6 @@ def prefix_jaccard_pairs(
             / (F.col("size_a") + F.col("size_b") - F.col("inter_size")).cast("double")
         ).alias("jaccard"),
     )
-    out._persisted_intermediates = [sets, prefix]  # release_intermediates(out)
     return out
 
 
@@ -411,10 +394,10 @@ def ngram_containment_pairs(
     Output: (id_a, id_b, inter_size, size_a, size_b, containment) with
     id_a < id_b and containment >= threshold.
     """
-    posts = (
-        word_ngrams(df, id_col, text_col, n)
-        .select("id", F.xxhash64("ngram").alias("gh"))
-        .persist()
+    posts = pin(
+        word_ngrams(df, id_col, text_col, n).select(
+            "id", F.xxhash64("ngram").alias("gh")
+        )
     )
     sizes = posts.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = posts.select(F.col("id").alias("id_a"), "gh")
@@ -442,7 +425,6 @@ def ngram_containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "inter_size", "size_a", "size_b", "containment")
     )
-    out._persisted_intermediates = [posts]  # release_intermediates(out)
     return out
 
 
@@ -552,10 +534,12 @@ def minhash_near_duplicates(
 
     Output: (id_a, id_b, est_jaccard) with id_a < id_b.
     """
-    sig = minhash_signatures(
-        df, id_col, text_col, num_perm=num_perm, shingle_size=shingle_size,
-        hashed=hashed,
-    ).persist()
+    sig = pin(
+        minhash_signatures(
+            df, id_col, text_col, num_perm=num_perm, shingle_size=shingle_size,
+            hashed=hashed,
+        )
+    )
     banded = band_postings(sig, num_perm=num_perm, bands=bands).select(
         "id", "band_no", "band_key"
     )
@@ -585,7 +569,6 @@ def minhash_near_duplicates(
             "id_a", "id_b", (matches / F.lit(num_perm)).alias("est_jaccard")
         )
     )
-    out._persisted_intermediates = [sig]  # release_intermediates(out)
     return out
 
 
@@ -623,11 +606,10 @@ def minhash_verified_pairs(
     posts = word_ngrams(df, id_col, text_col, shingle_size).select(
         "id", F.xxhash64("ngram").alias("h")
     )
-    cands_raw = minhash_near_duplicates(
+    cands = minhash_near_duplicates(
         df, id_col, text_col, num_perm=num_perm, bands=bands,
         shingle_size=shingle_size, hashed=posts,
-    )
-    cands = cands_raw.select("id_a", "id_b")
+    ).select("id_a", "id_b")
     sizes = posts.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     pa = posts.select(F.col("id").alias("id_a"), "h")
     pb = posts.select(F.col("id").alias("id_b"), "h")
@@ -651,12 +633,6 @@ def minhash_verified_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-    # propagate the signature cache persisted inside the banding call —
-    # .select() on cands dropped its attribute, and without this
-    # release_intermediates(out) would leak it
-    out._persisted_intermediates = list(
-        getattr(cands_raw, "_persisted_intermediates", [])
     )
     return out
 
@@ -869,7 +845,7 @@ def minhash_dedup_incremental(
     sig = minhash_signatures(
         new_df, id_col, text_col, num_perm=num_perm, shingle_size=shingle_size
     )
-    new_posts = band_postings(sig, num_perm=num_perm, bands=bands).persist()
+    new_posts = pin(band_postings(sig, num_perm=num_perm, bands=bands))
 
     if index_df is None:
         all_posts = new_posts.withColumn("__from_index", F.lit(False))
@@ -943,8 +919,6 @@ def minhash_dedup_incremental(
         if index_df is None
         else index_df.select("id", "band_no", "band_key", "sig").unionByName(kept_posts)
     )
-    for frame in (kept, dropped, new_index):
-        frame._persisted_intermediates = [new_posts]  # release_intermediates()
     return kept, dropped, new_index
 
 

@@ -221,11 +221,7 @@ def sorted_neighborhood_pairs(
         F.col("key").alias("key_b"),
         F.col("rank").alias("nbr"),
     )
-    out = a.join(b, "nbr").select("id_a", "id_b", "key_a", "key_b")
-    out._persisted_intermediates = getattr(  # noqa: SLF001
-        ranked, "_persisted_intermediates", ()
-    )
-    return out
+    return a.join(b, "nbr").select("id_a", "id_b", "key_a", "key_b")
 
 
 def add_jaro_winkler(

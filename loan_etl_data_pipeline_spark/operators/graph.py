@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from loan_etl_data_pipeline_spark.session import intermediates, pin
+
 
 def connected_components(
     edges: DataFrame,
@@ -435,56 +437,49 @@ def pagerank(
         raise ValueError(
             f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
         )
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    outdeg = (
-        e.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("odeg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty edge set (e.g. a support floor filtered everything):
-        # empty result, same schema — mirrors connected_components
-        for cached in (e, outdeg, nodes):
-            cached.unpersist()
-        return nodes.select("id", F.lit(0).cast("long").alias("pr"))
-    base = ((damping_den - damping_num) * scale) // damping_den
-    pr = nodes.select("id", F.lit(scale // n).cast("long").alias("pr"))
-    for i in range(iterations):
-        inbound = (
-            e.join(outdeg, "u")
-            .join(pr.withColumnRenamed("id", "u"), "u")
-            .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
+    with intermediates():
+        mad = StorageLevel.MEMORY_AND_DISK
+        e = pin(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
+            mad,
         )
-        pr = nodes.join(inbound, "id", "left").select(
-            "id",
-            (
-                F.lit(base).cast("long")
-                + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
-            ).alias("pr"),
+        outdeg = pin(e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg")), mad)
+        nodes = pin(
+            e.select(F.col("u").alias("id"))
+            .union(e.select(F.col("v").alias("id")))
+            .distinct(),
+            mad,
         )
-        if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-            pr = pr.localCheckpoint(eager=False)
-    # eager final checkpoint: pr is one small row per node post-agg, and
-    # materializing it here lets the three loop-invariant caches be
-    # released INSIDE the operator — callers (q_pagerank et al.) don't
-    # carry a release obligation, so long-lived sessions don't leak
-    # storage blocks until clearCache
-    pr = pr.localCheckpoint(eager=True)
-    for cached in (e, outdeg, nodes):
-        cached.unpersist()
+        n = nodes.count()
+        if n == 0:
+            # empty edge set (e.g. a support floor filtered everything):
+            # empty result, same schema — mirrors connected_components
+            return nodes.select("id", F.lit(0).cast("long").alias("pr"))
+        base = ((damping_den - damping_num) * scale) // damping_den
+        pr = nodes.select("id", F.lit(scale // n).cast("long").alias("pr"))
+        for i in range(iterations):
+            inbound = (
+                e.join(outdeg, "u")
+                .join(pr.withColumnRenamed("id", "u"), "u")
+                .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("s"))
+            )
+            pr = nodes.join(inbound, "id", "left").select(
+                "id",
+                (
+                    F.lit(base).cast("long")
+                    + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
+                ).alias("pr"),
+            )
+            if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
+                pr = pr.localCheckpoint(eager=False)
+        # eager final checkpoint: pr is one small row per node post-agg,
+        # and materializing it here lets the scope release the three
+        # loop-invariant caches INSIDE the operator — callers
+        # (q_pagerank et al.) carry no release obligation, so long-lived
+        # sessions don't leak storage blocks until clearCache
+        pr = pr.localCheckpoint(eager=True)
     return pr
 
 
@@ -823,60 +818,58 @@ def personalized_pagerank(
 
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sd = (
-        seeds.select(F.col(seeds.columns[0]).alias("id"))
-        .distinct()
-        .join(nodes, "id", "semi")
-        .withColumn("__seed", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_seeds = sd.count()
-    if n_seeds == 0:
-        for cached in (e, outdeg, nodes, sd):
-            cached.unpersist()
-        raise ValueError("seeds contain no graph nodes")
-    base = ((damping_den - damping_num) * scale) // damping_den
-    flagged = nodes.join(F.broadcast(sd), "id", "left").select(
-        "id", F.coalesce("__seed", F.lit(0)).alias("__seed")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    pr = flagged.select(
-        "id",
-        (F.col("__seed") * F.lit(scale // n_seeds)).cast("long").alias("pr"),
-    )
-    for _ in range(iterations):
-        inbound = (
-            e.join(outdeg, "u")
-            .join(pr.withColumnRenamed("id", "u"), "u")
-            .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
+    with intermediates():
+        mad = StorageLevel.MEMORY_AND_DISK
+        e = pin(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
+            mad,
         )
-        pr = flagged.join(inbound, "id", "left").select(
+        outdeg = pin(e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg")), mad)
+        nodes = pin(
+            e.select(F.col("u").alias("id"))
+            .union(e.select(F.col("v").alias("id")))
+            .distinct(),
+            mad,
+        )
+        sd = pin(
+            seeds.select(F.col(seeds.columns[0]).alias("id"))
+            .distinct()
+            .join(nodes, "id", "semi")
+            .withColumn("__seed", F.lit(1)),
+            mad,
+        )
+        n_seeds = sd.count()
+        if n_seeds == 0:
+            raise ValueError("seeds contain no graph nodes")
+        base = ((damping_den - damping_num) * scale) // damping_den
+        flagged = pin(
+            nodes.join(F.broadcast(sd), "id", "left").select(
+                "id", F.coalesce("__seed", F.lit(0)).alias("__seed")
+            ),
+            mad,
+        )
+        pr = flagged.select(
             "id",
-            (
-                F.col("__seed").cast("long") * F.lit(base)
-                + F.expr(
-                    f"({damping_num} * coalesce(s, 0L)) div {damping_den}"
-                )
-            ).alias("pr"),
+            (F.col("__seed") * F.lit(scale // n_seeds)).cast("long").alias("pr"),
         )
-    pr = pr.localCheckpoint(eager=True)
-    for cached in (e, outdeg, nodes, sd, flagged):
-        cached.unpersist()
+        for _ in range(iterations):
+            inbound = (
+                e.join(outdeg, "u")
+                .join(pr.withColumnRenamed("id", "u"), "u")
+                .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("s"))
+            )
+            pr = flagged.join(inbound, "id", "left").select(
+                "id",
+                (
+                    F.col("__seed").cast("long") * F.lit(base)
+                    + F.expr(
+                        f"({damping_num} * coalesce(s, 0L)) div {damping_den}"
+                    )
+                ).alias("pr"),
+            )
+        pr = pr.localCheckpoint(eager=True)
     return pr
 
 

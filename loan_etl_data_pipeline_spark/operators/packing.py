@@ -118,8 +118,8 @@ def pack_next_fit(
     function of the global order, it is partitioning-reproducible and
     fully value-oracle-able, unlike any distributed bin packing. The
     global prefix sum uses functions/ranking.global_cumsum (range-
-    partitioned, never a single-task window). Release the cached
-    intermediate via operators.dedup.release_intermediates.
+    partitioned, never a single-task window); its cached intermediate
+    is released by the caller's ``session.intermediates()`` scope.
     """
     from loan_etl_data_pipeline_spark.functions.ranking import global_cumsum
 
@@ -128,12 +128,10 @@ def pack_next_fit(
     cum = global_cumsum(
         df, [F.col(id_col).asc()], length_col, cum_col="__cum"
     )
-    out = (
+    return (
         cum.withColumn(
             "start_offset", (F.col("__cum") - F.col(length_col)).cast("bigint")
         )
         .withColumn("pack_id", F.expr(f"start_offset div {capacity}L"))
         .drop("__cum")
     )
-    out._persisted_intermediates = getattr(cum, "_persisted_intermediates", [])
-    return out

@@ -52,6 +52,7 @@ from loan_etl_data_pipeline_spark.functions.localframe import values_frame
 import pyspark.sql.functions as F
 
 from loan_etl_data_pipeline_spark.operators.text import tokens
+from loan_etl_data_pipeline_spark.session import intermediates, pin
 
 
 def _bm25_score(n_terms: int, idf: list[float], avgdl: float, k1: float, b: float):
@@ -295,14 +296,19 @@ def build_text_index(
     from pyspark import StorageLevel
 
     arr = tokens(F.lower(F.col(text_col)))
-    # persisted across the three consumers (postings write, doclens
+    # pinned across the three consumers (postings write, doclens
     # write, stats agg) — otherwise the corpus is scanned and
     # re-tokenized three times per build; released before returning
     # since the build is terminal.
-    base = df.select(
-        F.col(id_col).alias("id"), F.size(arr).cast("bigint").alias("dl"), arr.alias("__toks")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with intermediates():
+        base = pin(
+            df.select(
+                F.col(id_col).alias("id"),
+                F.size(arr).cast("bigint").alias("dl"),
+                arr.alias("__toks"),
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        )
         posts = (
             base.select("id", F.explode("__toks").alias("tok"))
             .groupBy("tok", "id")
@@ -324,8 +330,6 @@ def build_text_index(
             index_dir,
             base.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")),
         )
-    finally:
-        base.unpersist()
 
 
 def bm25_topk_indexed(
@@ -477,10 +481,15 @@ def update_text_index(
     from pyspark import StorageLevel
 
     arr = tokens(F.lower(F.col(text_col)))
-    base = new_df.select(
-        F.col(id_col).alias("id"), F.size(arr).cast("bigint").alias("dl"), arr.alias("__toks")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with intermediates():
+        base = pin(
+            new_df.select(
+                F.col(id_col).alias("id"),
+                F.size(arr).cast("bigint").alias("dl"),
+                arr.alias("__toks"),
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        )
         posts = (
             base.select("id", F.explode("__toks").alias("tok"))
             .groupBy("tok", "id")
@@ -501,8 +510,6 @@ def update_text_index(
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"))
         )
         _swap_stats(spark, index_dir, stats)
-    finally:
-        base.unpersist()
 
 
 def bm25_prf(

@@ -82,12 +82,30 @@ def _mat_rb(col: "pa.Array") -> np.ndarray:
     """(n, d) float64 matrix from an Arrow list<float/double> column —
     one offsets-aware flatten + reshape instead of the per-row
     np.asarray loop of :func:`_mat` (opt r9). Values are identical:
-    float32→float64 widening is exact either way. Raises (reshape) on
-    ragged rows — embeddings are fixed-width by contract."""
+    float32→float64 widening is exact either way.
+
+    Raises ``ValueError`` on a null vector or on ragged widths: the
+    flatten drops null slots and the reshape only checks the total
+    size, so either would otherwise silently shift vectors against
+    their ids (a ``[[.1, .2], None]`` batch reshapes to 2×1). The
+    check reads the null count and the offsets buffer — one vectorized
+    pass per batch, no per-row Python."""
     import pyarrow as pa
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(
+            f"{col.null_count} null embedding vector(s) in a batch of "
+            f"{len(col)}: drop or fill them before the similarity kernel"
+        )
+    if not pa.types.is_fixed_size_list(col.type):
+        widths = np.diff(col.offsets.to_numpy())
+        if widths.size and (widths != widths[0]).any():
+            raise ValueError(
+                f"ragged embedding vectors (widths {widths.min()}.."
+                f"{widths.max()}): embeddings must be fixed-width"
+            )
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return flat.astype(np.float64, copy=False).reshape(len(col), -1)
 

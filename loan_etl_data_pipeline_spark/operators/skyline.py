@@ -27,6 +27,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from loan_etl_data_pipeline_spark.session import pin
+
 
 def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """All rows of ``df`` on the minimizing Pareto frontier of
@@ -40,11 +42,15 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """
     agg = df.groupBy(x_col).agg(F.min(y_col).alias("__miny"))
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    ranged = (
+    # pinned: the driver-side prefix below is computed from THIS range
+    # partitioning, so the frontier pass must read the same
+    # materialization (a recomputed range exchange re-samples its
+    # boundaries); the caller's intermediates() scope releases it
+    ranged = pin(
         agg.repartitionByRange(nparts, F.asc(x_col))
         .sortWithinPartitions(F.asc(x_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("__pid", F.spark_partition_id()),
+        StorageLevel.MEMORY_AND_DISK,
     )
     # nparts scalars: the minimum __miny of every partition, used to
     # seed each partition's running min with everything to its left.
@@ -60,7 +66,6 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         if m is not None:  # all-null-y partitions contribute nothing
             best = m if best is None else min(best, m)
     if not prefix:
-        ranged.unpersist()
         return df.limit(0)
     y_type = agg.schema["__miny"].dataType
     whens = [
@@ -90,12 +95,7 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     fx = frontier_x.select(
         F.col(x_col).alias("__fx"), F.col("__miny").alias("__fy")
     )
-    out = (
-        df.join(
-            F.broadcast(fx),
-            (F.col(x_col) == F.col("__fx")) & (F.col(y_col) == F.col("__fy")),
-        )
-        .drop("__fx", "__fy")
-    )
-    out._persisted_intermediates = [ranged]
-    return out
+    return df.join(
+        F.broadcast(fx),
+        (F.col(x_col) == F.col("__fx")) & (F.col(y_col) == F.col("__fy")),
+    ).drop("__fx", "__fy")

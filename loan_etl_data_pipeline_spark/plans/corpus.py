@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 
 from loan_etl_data_pipeline_spark.operators.dedup import dedup_by_fingerprint
 from loan_etl_data_pipeline_spark.operators.text import lang_id, text_quality, token_counts
+from loan_etl_data_pipeline_spark.session import intermediates, pin
 
 
 def remove_near_duplicates(
@@ -72,28 +73,27 @@ def remove_near_duplicates(
     from loan_etl_data_pipeline_spark.operators.dedup import (
         minhash_near_duplicates,
         ngram_jaccard_pairs,
-        release_intermediates,
     )
     from loan_etl_data_pipeline_spark.operators.graph import connected_components
 
-    if pairs is not None:
-        edges = pairs
-    elif method == "minhash":
-        pairs = minhash_near_duplicates(df, id_col, text_col)
-        edges = pairs.filter(F.col("est_jaccard") >= threshold)
-    elif method == "jaccard":
-        pairs = ngram_jaccard_pairs(df, id_col, text_col, threshold=threshold)
-        edges = pairs
-    else:
-        raise ValueError(f"method must be 'minhash' or 'jaccard', got {method!r}")
-
-    comps = connected_components(edges, "id_a", "id_b")
+    with intermediates():
+        if pairs is not None:
+            edges = pairs
+        elif method == "minhash":
+            edges = minhash_near_duplicates(df, id_col, text_col).filter(
+                F.col("est_jaccard") >= threshold
+            )
+        elif method == "jaccard":
+            edges = ngram_jaccard_pairs(df, id_col, text_col, threshold=threshold)
+        else:
+            raise ValueError(
+                f"method must be 'minhash' or 'jaccard', got {method!r}"
+            )
+        comps = connected_components(edges, "id_a", "id_b")
     losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
-    out = df.join(losers, id_col, "left_anti")
-    release_intermediates(pairs)
-    return out
+    return df.join(losers, id_col, "left_anti")
 
 
 def prepare_corpus(
@@ -163,12 +163,13 @@ def prepare_corpus_v2(
     )
     from loan_etl_data_pipeline_spark.operators.dedup import ngram_decontaminate
 
-    # persisted: base feeds BOTH the decontamination gram scan and the
-    # anti-join's kept side — unpersisted, the whole quality+dedup+lang
-    # subplan would execute twice per action. Caller releases with
-    # operators.dedup.release_intermediates(result).
-    base = prepare_corpus(df, id_col, text_col, langs=langs).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # pinned: base feeds BOTH the decontamination gram scan and the
+    # anti-join's kept side — unpinned, the whole quality+dedup+lang
+    # subplan would execute twice per action. Released by the caller's
+    # session.intermediates() scope once the result is materialized.
+    base = pin(
+        prepare_corpus(df, id_col, text_col, langs=langs),
+        StorageLevel.MEMORY_AND_DISK,
     )
     survivors_text = df.select(id_col, text_col).join(
         base.select(id_col), id_col
@@ -176,12 +177,7 @@ def prepare_corpus_v2(
     hits = ngram_decontaminate(survivors_text, eval_df, id_col, text_col, n=decontam_n)
     clean = base.join(hits.select(id_col), id_col, "left_anti")
     tiled = curriculum_tiles(clean, "n_bpe_tokens", n_tiles, id_col=id_col)
-    out = hash_split(tiled, id_col, train_frac=train_frac, salt=salt)
-    # propagate the tile stage's persisted handle and add our own
-    out._persisted_intermediates = [base] + list(
-        getattr(tiled, "_persisted_intermediates", ())
-    )
-    return out
+    return hash_split(tiled, id_col, train_frac=train_frac, salt=salt)
 
 
 def prepare_corpus_v3(

@@ -28,6 +28,7 @@ from loan_etl_data_pipeline_spark.operators.profile import (
     write_insights_json,
 )
 from loan_etl_data_pipeline_spark.sources.csv import read_csv
+from loan_etl_data_pipeline_spark.session import intermediates, pin
 
 
 def clean(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -94,12 +95,10 @@ def run_etl(
     # so a 100 TB run degrades to disk instead of OOM; on a real cluster
     # you'd often skip the cache and let the parquet write feed insights
     # by re-reading the written output — both paths avoid re-scanning CSV.
-    cleaned.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with intermediates():
+        pin(cleaned, StorageLevel.MEMORY_AND_DISK)
         cleaned.write.mode(write_mode).parquet(output_path)
         insights = generate_insights(cleaned)
-    finally:
-        cleaned.unpersist()
 
     if insights_path:
         write_insights_json(insights, insights_path)
@@ -136,14 +135,14 @@ def run_etl_incremental(
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(mode_key, None)
     spark.conf.set(mode_key, "dynamic")
-    cleaned.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        cleaned.write.mode("overwrite").partitionBy(partition_col).parquet(
-            output_path
-        )
-        insights = generate_insights(cleaned)
+        with intermediates():
+            pin(cleaned, StorageLevel.MEMORY_AND_DISK)
+            cleaned.write.mode("overwrite").partitionBy(
+                partition_col
+            ).parquet(output_path)
+            insights = generate_insights(cleaned)
     finally:
-        cleaned.unpersist()
         if prev is None:
             spark.conf.unset(mode_key)
         else:

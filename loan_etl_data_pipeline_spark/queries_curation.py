@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 
 from loan_etl_data_pipeline_spark.functions.deterministic import dsum_sql
 from loan_etl_data_pipeline_spark.sources.tables import load_table
+from loan_etl_data_pipeline_spark.session import intermediates
 
 _WINNOW_K = 8
 _WINNOW_W = 4
@@ -397,14 +398,13 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a component lands on the same side, forever, on any engine.
     """
     from loan_etl_data_pipeline_spark.functions.splits import hash_split
-    from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
     from loan_etl_data_pipeline_spark.operators.graph import connected_components
     from loan_etl_data_pipeline_spark.queries import _jaccard_pair_graph
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = _jaccard_pair_graph(spark, sf_dir)
-    comp = connected_components(pairs, "id_a", "id_b")
-    release_intermediates(pairs)
+    with intermediates():
+        pairs = _jaccard_pair_graph(spark, sf_dir)
+        comp = connected_components(pairs, "id_a", "id_b")
     labeled = docs.join(
         comp.select(F.col("id").alias("doc_id"), "component"), "doc_id", "left"
     ).withColumn("component", F.coalesce("component", "doc_id"))
@@ -440,7 +440,7 @@ def q_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_src = ranked_full.groupBy("source").agg(
         F.min("__gr").alias("__off"), F.count(F.lit(1)).alias("__cnt")
     )
-    out = (
+    return (
         ranked_full.join(F.broadcast(per_src), "source")
         .select(
             "doc_id",
@@ -453,10 +453,6 @@ def q_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pct_in_source"),
         )
     )
-    out._persisted_intermediates = list(
-        getattr(ranked_full, "_persisted_intermediates", ())
-    )
-    return out
 
 
 def q_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1903,7 +1899,7 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     p90 = ranked.filter(F.col("r") == F.expr("(9 * __n + 9) div 10")).select(
         F.col("n_chars").alias("p90_chars")
     )
-    out = (
+    return (
         size_stats.crossJoin(F.broadcast(vocab))
         .crossJoin(F.broadcast(n_en))
         .crossJoin(F.broadcast(med))
@@ -1920,12 +1916,6 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p90_chars",
         )
     )
-    # global_rank persists its range-shuffled frame; forward the handle
-    # (ADVICE r8 — release_intermediates(out) must actually free it)
-    out._persisted_intermediates = list(
-        getattr(ranked, "_persisted_intermediates", ())
-    )
-    return out
 
 
 QUERIES_CURATION["q_data_card"] = q_data_card
@@ -1995,8 +1985,7 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = del1_pairs(c, "c_custkey", "c_name").select(
         F.col("id_a").alias("lo"), F.col("id_b").alias("hi")
     )
-    raw_cand = sorted_neighborhood_pairs(c, "c_custkey", "c_name", window=6)
-    cand = raw_cand.select(
+    cand = sorted_neighborhood_pairs(c, "c_custkey", "c_name", window=6).select(
         F.least("id_a", "id_b").alias("lo"),
         F.greatest("id_a", "id_b").alias("hi"),
     ).distinct()
@@ -2005,7 +1994,7 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     nc = cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
-    out = (
+    return (
         nt.crossJoin(F.broadcast(nc))
         .crossJoin(F.broadcast(hit))
         .select(
@@ -2016,12 +2005,6 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(n_hit * 1000000000L) div n_cand").alias("precision9"),
         )
     )
-    # forward the sorted-neighborhood ranked frame for release (the
-    # attribute lives on the RAW pairs frame; select/distinct drop it)
-    out._persisted_intermediates = getattr(  # noqa: SLF001
-        raw_cand, "_persisted_intermediates", ()
-    )
-    return out
 
 
 QUERIES_CURATION["q_blocking_eval"] = q_blocking_eval
@@ -2145,13 +2128,12 @@ def q_jaccard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from loan_etl_data_pipeline_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        release_intermediates,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.0)
     thr = F.explode(F.expr("sequence(1, 9)")).alias("thr_decile")
-    out = (
+    return (
         pairs.select(
             "inter_size",
             (F.col("size_a") + F.col("size_b") - F.col("inter_size")).alias(
@@ -2164,10 +2146,6 @@ def q_jaccard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
         .select(F.col("thr_decile").cast("bigint").alias("thr_decile"), "n_pairs")
     )
-    out._persisted_intermediates = getattr(  # noqa: SLF001
-        pairs, "_persisted_intermediates", ()
-    )
-    return out
 
 
 QUERIES_CURATION["q_jaccard_curve"] = q_jaccard_curve

@@ -414,7 +414,6 @@ def _priority_price_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey)`` without the Exchange SinglePartition a bare global
     window compiles to (the q_rfm_segments discipline; orders are
     SF-proportional, so a single-partition sort is a non-starter).
-    Carries ``_persisted_intermediates`` for release.
     """
     from loan_etl_data_pipeline_spark.functions.ranking import (
         global_rank,
@@ -429,16 +428,10 @@ def _priority_price_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_rank(
         o, [F.asc("__c"), F.asc("__k")], rank_col="__rk", total_col="__n"
     )
-    out = ranked.select(
+    return ranked.select(
         "r1",
         ntile_from_rank(F.col("__rk"), F.col("__n"), 5).alias("r2"),
     )
-    # the select drops global_rank's attribute; re-attach so the
-    # docstring's release contract is actually true (ADVICE r8)
-    out._persisted_intermediates = list(
-        getattr(ranked, "_persisted_intermediates", ())
-    )
-    return out
 
 
 @_q("q_weighted_kappa")
@@ -482,7 +475,7 @@ def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("we")
         )
     )
-    out = (
+    return (
         n.crossJoin(F.broadcast(obs))
         .crossJoin(F.broadcast(exp))
         .select(
@@ -493,8 +486,6 @@ def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("weighted_kappa"),
         )
     )
-    out._persisted_intermediates = getattr(o, "_persisted_intermediates", [])
-    return out
 
 
 ORACLE_R7["q_weighted_kappa"] = f"""
@@ -1323,14 +1314,12 @@ def q_dunn_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ka") != F.col("kb"))
         .agg(F.min(F.col("vb") - F.col("va")).cast("bigint").alias("min_inter"))
     )
-    out = diam.crossJoin(F.broadcast(gaps)).select(
+    return diam.crossJoin(F.broadcast(gaps)).select(
         "min_inter",
         "max_diam",
         (F.col("min_inter").cast("double") / F.col("max_diam").cast("double"))
         .alias("dunn"),
     )
-    out._persisted_intermediates = getattr(ranked, "_persisted_intermediates", [])
-    return out
 
 
 ORACLE_R7["q_dunn_index"] = """
@@ -1533,7 +1522,7 @@ def q_bowker(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = p.withColumn("d2", (d * d).cast("decimal(38,0)")).withColumn(
         "s", (F.col("nij") + F.col("nji")).cast("bigint")
     )
-    out = p.select(
+    return p.select(
         "i",
         "j",
         "nij",
@@ -1543,8 +1532,6 @@ def q_bowker(spark: SparkSession, sf_dir: str) -> DataFrame:
             "contrib"
         ),
     ).orderBy("i", "j")
-    out._persisted_intermediates = getattr(o, "_persisted_intermediates", [])
-    return out
 
 
 ORACLE_R7["q_bowker"] = f"""
@@ -1624,7 +1611,7 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
     tot = Window.partitionBy()
-    out = per_dec.select(
+    return per_dec.select(
         "decile",
         "n_cust",
         "cents",
@@ -1633,8 +1620,6 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("cents").over(tot).cast("double")
         ).alias("cum_share"),
     ).orderBy("decile")
-    out._persisted_intermediates = getattr(ranked, "_persisted_intermediates", [])
-    return out
 
 
 ORACLE_R7["q_lorenz_deciles"] = """

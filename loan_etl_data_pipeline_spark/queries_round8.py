@@ -200,9 +200,6 @@ def _square_margins(spark: SparkSession, sf_dir: str):
             F.coalesce("r", F.lit(0)) + F.coalesce("c", F.lit(0))
         ).cast("bigint").alias("m"),
     )
-    cells._persisted_intermediates = getattr(
-        o, "_persisted_intermediates", []
-    )
     return cells, marg
 
 
@@ -229,7 +226,7 @@ def q_scott_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = marg.agg(
         F.sum(_dec19("m") * _dec19("m")).cast("decimal(38,0)").alias("s2")
     )
-    out = agg.crossJoin(F.broadcast(s2)).select(
+    return agg.crossJoin(F.broadcast(s2)).select(
         F.col("nn").alias("n"),
         "d",
         (
@@ -246,10 +243,6 @@ def q_scott_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("scott_pi"),
     )
-    out._persisted_intermediates = getattr(
-        cells, "_persisted_intermediates", []
-    )
-    return out
 
 
 ORACLE_R8["q_scott_pi"] = f"""
@@ -308,7 +301,7 @@ def q_gwet_ac1(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pe")
         )
     )
-    out = agg.crossJoin(F.broadcast(pe)).select(
+    return agg.crossJoin(F.broadcast(pe)).select(
         F.col("nn").alias("n"),
         "d",
         (
@@ -325,10 +318,6 @@ def q_gwet_ac1(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("gwet_ac1"),
     )
-    out._persisted_intermediates = getattr(
-        cells, "_persisted_intermediates", []
-    )
-    return out
 
 
 ORACLE_R8["q_gwet_ac1"] = f"""
@@ -378,7 +367,7 @@ def q_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("cm").cast("bigint").alias("max_marg"))
     )
     nn = cells.agg(F.sum("n").cast("bigint").alias("n"))
-    out = (
+    return (
         nn.crossJoin(F.broadcast(best_in_x))
         .crossJoin(F.broadcast(col_marg))
         .select(
@@ -392,10 +381,6 @@ def q_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gk_lambda"),
         )
     )
-    out._persisted_intermediates = getattr(
-        cells, "_persisted_intermediates", []
-    )
-    return out
 
 
 ORACLE_R8["q_gk_lambda"] = f"""
@@ -905,18 +890,12 @@ def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("Z"))
         .alias("xyz"),
     )
-    out = (
+    return (
         abc.join(xyz, "l_partkey")
         .groupBy("abc", "xyz")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_parts"))
         .orderBy("abc", "xyz")
     )
-    # global_cumsum DOES persist its range-shuffled frame; forward the
-    # handle so release_intermediates(out) frees it (ADVICE r8)
-    out._persisted_intermediates = list(
-        getattr(cum, "_persisted_intermediates", ())
-    )
-    return out
 
 
 ORACLE_R8["q_abc_xyz_matrix"] = """

@@ -10,8 +10,12 @@ keeping the same one-call surface.
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -200,3 +204,43 @@ def create_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Spark caches by plan in one session-wide CacheManager with no
+# per-query scope, so every cached intermediate is pinned through
+# ``pin`` and released by the innermost open ``intermediates()`` scope
+# (per thread). With no scope open a pinned frame lives until
+# ``spark.catalog.clearCache()``.
+class _Scopes(threading.local):
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
+
+
+_scopes = _Scopes()
+
+
+def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """``df.persist(level)`` (Spark's default level when ``None``),
+    recorded in the innermost open :func:`intermediates` scope."""
+    df = df.persist() if level is None else df.persist(level)
+    if _scopes.stack:
+        _scopes.stack[-1].append(df)
+    return df
+
+
+@contextmanager
+def intermediates() -> Iterator[None]:
+    """Scope for pinned intermediates: leaving it (normally or by an
+    exception) unpersists exactly the frames pinned inside it and not
+    in a nested scope. Close it only after every result built inside
+    has been materialized — a lazy result that still reads a released
+    cache recomputes it, and ``global_rank``'s offsets stay consistent
+    with its rows only while its range-shuffled frame is pinned."""
+    handles: list[DataFrame] = []
+    _scopes.stack.append(handles)
+    try:
+        yield
+    finally:
+        _scopes.stack.pop()
+        for df in handles:
+            df.unpersist()

@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType, StructField, StructType
 
 from loan_etl_data_pipeline_spark.plans.etl import clean
+from loan_etl_data_pipeline_spark.session import intermediates
 
 
 def stream_etl(
@@ -709,17 +710,22 @@ def stream_neardup_dedup(
         return spark.read.parquet(*fs_dirs)
 
     def _batch(bdf: DataFrame, bid: int) -> None:
-        idx = _load_index(bid)
-        kept, _dropped, _ = minhash_dedup_incremental(
-            bdf, idx, id_col, text_col, **dedup_kwargs
-        )
-        kept = kept.localCheckpoint()  # consumed twice: rows + postings
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch={bid}")
-        delta_posts = band_postings(
-            minhash_signatures(kept, id_col, text_col, **sig_kwargs),
-            **post_kwargs,
-        )
-        delta_posts.write.mode("overwrite").parquet(f"{index_dir}/batch={bid}")
+        # the batch writes everything it builds, so its pinned postings
+        # are released when it returns instead of accumulating per batch
+        with intermediates():
+            idx = _load_index(bid)
+            kept, _dropped, _ = minhash_dedup_incremental(
+                bdf, idx, id_col, text_col, **dedup_kwargs
+            )
+            kept = kept.localCheckpoint()  # consumed twice: rows + postings
+            kept.write.mode("overwrite").parquet(f"{out_dir}/batch={bid}")
+            delta_posts = band_postings(
+                minhash_signatures(kept, id_col, text_col, **sig_kwargs),
+                **post_kwargs,
+            )
+            delta_posts.write.mode("overwrite").parquet(
+                f"{index_dir}/batch={bid}"
+            )
 
     writer = docs.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir

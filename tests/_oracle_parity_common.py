@@ -80,17 +80,36 @@ def make_duck_fixture():
 
 
 def run_parity(name: str, spark, sf_dir: str, duck) -> None:
+    """Build the query inside one ``intermediates()`` scope, audit its
+    plan (no cartesian product, no row-at-a-time Python UDF stage),
+    collect it, and — after the scope closes — require the session's
+    CacheManager to be empty again: every intermediate the query pinned
+    must belong to the scope."""
+    from loan_etl_data_pipeline_spark.plans.audit import plan_health
     from loan_etl_data_pipeline_spark.queries import DRIVER_SF_DIR
+    from loan_etl_data_pipeline_spark.session import intermediates
 
-    if name == "q_file_health" and sf_dir.rstrip("/") != DRIVER_SF_DIR:
-        # its oracle reads physical files by path at the driver's
-        # pinned dir (filenames aren't reachable through the views);
-        # parity holds only when this replica runs at that SF — the
-        # driver gate itself always does
-        pytest.skip("q_file_health oracle pins the driver's SF paths")
-    sdf = QUERIES[name](spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = sdf.collect()
+    spark.catalog.clearCache()
+    with intermediates():
+        sdf = QUERIES[name](spark, sf_dir)
+        h = plan_health(sdf)
+        assert not h["cartesian_products"], (
+            f"{name}: cartesian_products={h['cartesian_products']}"
+        )
+        assert not h["row_udf_stages"], (
+            f"{name}: BatchEvalPythonExec (row-at-a-time UDF)"
+        )
+        if name == "q_file_health" and sf_dir.rstrip("/") != DRIVER_SF_DIR:
+            # its oracle reads physical files by path at the driver's
+            # pinned dir (filenames aren't reachable through the views);
+            # parity holds only when this replica runs at that SF — the
+            # driver gate itself always does
+            pytest.skip("q_file_health oracle pins the driver's SF paths")
+        spark_cols = sdf.columns
+        spark_rows = sdf.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name}: a cached intermediate outlived its intermediates() scope"
+    )
 
     res = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]

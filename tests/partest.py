@@ -6,8 +6,8 @@ pytest-xdist isn't in this environment, so this shards BY FILE over a
 dynamic work queue: N worker threads each run ``pytest <one file>`` in
 a subprocess with its own small Spark session (SPARK_GRAFT_CPUS=5 by
 default, so 6 workers ≈ 30 executor threads on the 32-CPU box). The
-queue self-balances — the fleet-invariant plan build (~3 min) and the
-oracle-parity file are seeded first so they never trail the tail.
+queue self-balances — the oracle-parity shards (which also audit every
+oracle-backed plan) are seeded first so they never trail the tail.
 
 Usage:  python tests/partest.py            # whole suite
         PARTEST_WORKERS=4 python tests/partest.py test_graph test_diff
@@ -34,10 +34,6 @@ REPO_DIR = os.path.dirname(TESTS_DIR)
 # (the oracle-parity gate is hash-sharded into 4 files — VERDICT r5
 # ask #2 — so no single shard dominates the critical path)
 _BIG_FIRST = [
-    "test_fleet_invariants_0.py",
-    "test_fleet_invariants_1.py",
-    "test_fleet_invariants_2.py",
-    "test_fleet_invariants_3.py",
     "test_oracle_parity_0.py",
     "test_oracle_parity_1.py",
     "test_oracle_parity_2.py",

@@ -40,9 +40,11 @@ def test_cartesian_and_python_stage_detected(spark):
 
 
 def test_cached_relation_counted_once_not_inlined(spark, sf_dir):
+    from loan_etl_data_pipeline_spark.session import intermediates, pin
+
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    agg = o.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")).persist()
-    try:
+    with intermediates():
+        agg = pin(o.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")))
         # two consumers of the cache: its build-plan exchange must NOT
         # leak into the live counts (the raw-string pitfall this
         # utility exists to remove)
@@ -50,8 +52,6 @@ def test_cached_relation_counted_once_not_inlined(spark, sf_dir):
         h = plan_health(df)
         assert h["cached_relations"] == 2
         assert h["exchanges"] <= 1  # only the scalar-agg side, if any
-    finally:
-        agg.unpersist()
 
 
 def test_engine_query_shapes(spark, sf_dir):
@@ -69,15 +69,12 @@ def test_spatial_nn_pairs_built_once(spark, sf_dir):
     """The symmetrizing union reads ONE cached pair join (unpersisted,
     the exploded join + distance filter would execute per branch)."""
     from loan_etl_data_pipeline_spark.queries import all_queries
+    from loan_etl_data_pipeline_spark.session import intermediates
 
-    df = all_queries()["q_spatial_nn"](spark, sf_dir)
-    try:
-        h = plan_health(df)
+    with intermediates():
+        h = plan_health(all_queries()["q_spatial_nn"](spark, sf_dir))
         assert h["cached_relations"] == 2  # both union branches hit the cache
         assert h["cartesian_products"] == 0
-    finally:
-        for p in getattr(df, "_persisted_intermediates", []):
-            p.unpersist()
 
 
 def test_aqe_final_plan_reflected_after_execution(spark):

@@ -26,9 +26,9 @@ from loan_etl_data_pipeline_spark.operators.dedup import (
     hamming_distance,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
-    release_intermediates,
     simhash_fingerprints,
 )
+from loan_etl_data_pipeline_spark.session import intermediates
 from loan_etl_data_pipeline_spark.sources.tables import load_table
 
 
@@ -40,18 +40,16 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def exact_pairs(docs):
     """Exact n-gram Jaccard pairs (threshold 0.5) keyed by (id_a, id_b)."""
-    df = ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}
-    release_intermediates(df)
-    return rows
+    with intermediates():
+        df = ngram_jaccard_pairs(docs, n=3, threshold=0.5)
+        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}
 
 
 @pytest.fixture(scope="module")
 def minhash_pairs(docs):
-    df = minhash_near_duplicates(docs)
-    rows = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in df.collect()}
-    release_intermediates(df)
-    return rows
+    with intermediates():
+        df = minhash_near_duplicates(docs)
+        return {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in df.collect()}
 
 
 def test_minhash_candidates_superset_of_high_jaccard(exact_pairs, minhash_pairs):
@@ -129,9 +127,9 @@ def test_simhash_near_duplicates_equals_bruteforce(docs, spark):
     }
     assert expected, "testdata should contain simhash near-dups at k=8"
 
-    out = simhash_near_duplicates(docs.repartition(7), max_hamming=k)
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in out.collect()}
-    release_intermediates(out)
+    with intermediates():
+        out = simhash_near_duplicates(docs.repartition(7), max_hamming=k)
+        got = {(r["id_a"], r["id_b"]): r["hamming"] for r in out.collect()}
     assert got == expected
 
 
@@ -144,9 +142,9 @@ def test_simhash_near_duplicates_skew_guard(spark):
         [(i, "same text everywhere again") for i in range(50)],
         "doc_id long, text string",
     )
-    out = simhash_near_duplicates(df, max_hamming=3, max_block_group=10)
-    assert out.count() == 0
-    release_intermediates(out)
+    with intermediates():
+        out = simhash_near_duplicates(df, max_hamming=3, max_block_group=10)
+        assert out.count() == 0
 
 
 def test_dedup_exact_keeps_deterministic_survivor(spark):
@@ -223,20 +221,19 @@ def test_incremental_dedup_oneshot_equals_banded_pairs(docs, spark):
     from loan_etl_data_pipeline_spark.operators.dedup import (
         minhash_dedup_incremental,
         minhash_near_duplicates,
-        release_intermediates,
     )
 
-    pairs = minhash_near_duplicates(docs)
-    expected = {
-        r["id_b"] for r in pairs.collect() if r["est_jaccard"] >= 0.7
-    }
-    release_intermediates(pairs)
+    with intermediates():
+        pairs = minhash_near_duplicates(docs)
+        expected = {
+            r["id_b"] for r in pairs.collect() if r["est_jaccard"] >= 0.7
+        }
 
-    kept, dropped, _ = minhash_dedup_incremental(docs, None, threshold=0.7)
-    got = {r["doc_id"] for r in dropped.collect()}
-    assert got == expected
-    assert kept.count() + len(got) == docs.count()
-    release_intermediates(dropped)
+    with intermediates():
+        kept, dropped, _ = minhash_dedup_incremental(docs, None, threshold=0.7)
+        got = {r["doc_id"] for r in dropped.collect()}
+        assert got == expected
+        assert kept.count() + len(got) == docs.count()
 
 
 # --- prefix_jaccard_pairs (PPJoin-style exact set-similarity join) ---

@@ -225,12 +225,14 @@ def test_read_csv_corrupt_record_quarantine(spark, tmp_path):
     schema = StructType(
         [StructField("a", LongType()), StructField("b", LongType())]
     )
-    df = read_csv(spark, str(p), schema=schema, corrupt_col="_bad").cache()
-    good = df.filter("_bad IS NULL").select("a", "b")
-    bad = df.filter("_bad IS NOT NULL")
-    assert sorted(map(tuple, good.collect())) == [(1, 2), (3, 4)]
-    assert [r["_bad"] for r in bad.collect()] == ["not_a_number,5"]
-    df.unpersist()
+    from loan_etl_data_pipeline_spark.session import intermediates, pin
+
+    with intermediates():
+        df = pin(read_csv(spark, str(p), schema=schema, corrupt_col="_bad"))
+        good = df.filter("_bad IS NULL").select("a", "b")
+        bad = df.filter("_bad IS NOT NULL")
+        assert sorted(map(tuple, good.collect())) == [(1, 2), (3, 4)]
+        assert [r["_bad"] for r in bad.collect()] == ["not_a_number,5"]
 
     with pytest.raises(ValueError, match="corrupt_col requires"):
         read_csv(spark, str(p), corrupt_col="_bad")

@@ -2,30 +2,42 @@
 
 The engine's standing claims — no row-at-a-time Python UDFs anywhere,
 no cartesian products, every Python stage Arrow-batched — are enforced
-by building the physical plan of EVERY registered query and asserting
-the invariants through the structured auditor (plans/audit.py).  The
-per-query plan builds are hash-sharded across
-``test_fleet_invariants_{0..3}.py`` (same discipline as the
-oracle-parity split — one all-plans test was partest's ~6 min critical
-path); this file keeps the partition-integrity check and the positive
-controls that prove the auditor is not vacuous.
+on the physical plan of EVERY registered query through the structured
+auditor (plans/audit.py).  The oracle-backed queries are audited by the
+parity check itself (``_oracle_parity_common.run_parity``) on the
+DataFrame it already builds; this file audits the rows-only queries
+(no oracle, so no parity run), proves the two sets cover the registry,
+and keeps the positive controls that prove the auditor is not vacuous.
 """
 
 from __future__ import annotations
 
-from _fleet_common import N_SHARDS, QUERIES, shard_names
+import pytest
 
 from loan_etl_data_pipeline_spark.plans.audit import plan_health
+from loan_etl_data_pipeline_spark.queries import all_oracles, all_queries
+from loan_etl_data_pipeline_spark.session import intermediates
+
+QUERIES = all_queries()
+ROWS_ONLY = [n for n in QUERIES if n not in all_oracles()]
 
 
 def test_shards_partition_every_query():
-    """The four shard files must form an EXACT partition of the query
-    registry — no plan lost, none double-built."""
-    union: list[str] = []
-    for k in range(N_SHARDS):
-        union.extend(shard_names(k))
-    assert sorted(union) == sorted(QUERIES)
-    assert len(union) == len(set(union))
+    """Oracle-backed names (audited in run_parity) and rows-only names
+    (audited below) must together be EXACTLY the registry — no plan
+    escapes the auditor."""
+    oracles = set(all_oracles())
+    assert oracles | set(ROWS_ONLY) == set(QUERIES)
+    assert not oracles & set(ROWS_ONLY)
+    assert len(ROWS_ONLY) == 14
+
+
+@pytest.mark.parametrize("name", ROWS_ONLY)
+def test_rows_only_query_plan_invariants(name, spark, sf_dir):
+    with intermediates():
+        h = plan_health(QUERIES[name](spark, sf_dir))
+    assert not h["cartesian_products"], h
+    assert not h["row_udf_stages"], "BatchEvalPythonExec (row-at-a-time UDF)"
 
 
 def test_invariant_detectors_are_not_vacuous(spark):

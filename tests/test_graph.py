@@ -465,9 +465,10 @@ def test_cheapest_paths_hand_graph(spark):
 
 
 def test_pagerank_family_releases_persisted_intermediates(spark):
-    """pagerank/personalized_pagerank persist their loop invariants
-    (edges, out-degrees, node set, seeds) internally; both must release
-    them before returning so long-lived sessions never accumulate cache
+    """pagerank/personalized_pagerank pin their loop invariants
+    (edges, out-degrees, node set, seeds) in their own intermediates()
+    scope, which must release them before returning — even inside a
+    caller's open scope — so long-lived sessions never accumulate cache
     entries until clearCache. Checked at the CacheManager level — the
     registry Dataset.persist writes to — after each operator completes.
     localCheckpoint RDD blocks are exempt: they are GC-managed by the
@@ -476,6 +477,7 @@ def test_pagerank_family_releases_persisted_intermediates(spark):
         pagerank,
         personalized_pagerank,
     )
+    from loan_etl_data_pipeline_spark.session import intermediates, pin
 
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
@@ -488,17 +490,18 @@ def test_pagerank_family_releases_persisted_intermediates(spark):
     assert cm.isEmpty(), "pagerank left persisted intermediates cached"
 
     seeds = spark.createDataFrame([(1,)], ["id"])
-    personalized_pagerank(edges, seeds=seeds, iterations=2).collect()
-    assert cm.isEmpty(), (
-        "personalized_pagerank left persisted intermediates cached"
-    )
+    with intermediates():
+        personalized_pagerank(edges, seeds=seeds, iterations=2).collect()
+        assert cm.isEmpty(), (
+            "personalized_pagerank left persisted intermediates cached"
+        )
 
     # positive control: an actually-persisted frame IS visible to the
     # detector (guards against a vacuously-green isEmpty probe)
-    held = edges.persist()
-    held.count()
-    assert not cm.isEmpty()
-    held.unpersist()
+    with intermediates():
+        held = pin(edges)
+        held.count()
+        assert not cm.isEmpty()
     assert cm.isEmpty()
 
 

@@ -64,23 +64,23 @@ def test_bad_budget(docs):
 
 
 def test_pack_next_fit_matches_sequential_layout(spark):
-    from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
     from loan_etl_data_pipeline_spark.operators.packing import pack_next_fit
+    from loan_etl_data_pipeline_spark.session import intermediates
 
     rows = [(i, (i * 37) % 90 + 10) for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, n long")
-    out = pack_next_fit(df, capacity=256, length_col="n")
-    got = {r["doc_id"]: (r["start_offset"], r["pack_id"]) for r in out.collect()}
-    release_intermediates(out)
+    with intermediates():
+        out = pack_next_fit(df, capacity=256, length_col="n")
+        got = {r["doc_id"]: (r["start_offset"], r["pack_id"]) for r in out.collect()}
     # python reference: exact concatenation offsets
     off = 0
     for i, n in rows:
         assert got[i] == (off, off // 256), i
         off += n
     # partitioning invariance
-    out2 = pack_next_fit(df.repartition(13), capacity=256, length_col="n")
-    got2 = {r["doc_id"]: (r["start_offset"], r["pack_id"]) for r in out2.collect()}
-    release_intermediates(out2)
+    with intermediates():
+        out2 = pack_next_fit(df.repartition(13), capacity=256, length_col="n")
+        got2 = {r["doc_id"]: (r["start_offset"], r["pack_id"]) for r in out2.collect()}
     assert got == got2
 
 

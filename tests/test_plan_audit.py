@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from loan_etl_data_pipeline_spark.queries import all_queries
+from loan_etl_data_pipeline_spark.session import intermediates
 
 
 @pytest.fixture(scope="module")
@@ -13,9 +14,9 @@ def plans(spark, sf_dir):
     qs = all_queries()
 
     def plan_of(name):
-        return (
-            qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
+        with intermediates():
+            df = qs[name](spark, sf_dir)
+            return df._jdf.queryExecution().executedPlan().toString()
 
     return plan_of
 
@@ -155,18 +156,15 @@ def test_materialized_pair_graph_consumers_scan_parquet(spark, sf_dir, tmp_path)
     physical plan is a parquet FileScan of the snapshot — it must NOT
     re-derive the pair graph (no postings self-join, no xxhash64 gram
     hashing, no shuffle joins at all for a simple aggregate)."""
-    from loan_etl_data_pipeline_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        release_intermediates,
-    )
+    from loan_etl_data_pipeline_spark.operators.dedup import ngram_jaccard_pairs
     from loan_etl_data_pipeline_spark.sources.tables import load_table
     from loan_etl_data_pipeline_spark.sources.versioned import materialize
 
-    pairs = ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.5
-    )
-    snap = materialize(pairs, str(tmp_path / "pairsnap"), key="k1")
-    release_intermediates(pairs)
+    with intermediates():
+        pairs = ngram_jaccard_pairs(
+            load_table(spark, sf_dir, "documents"), n=3, threshold=0.5
+        )
+        snap = materialize(pairs, str(tmp_path / "pairsnap"), key="k1")
 
     import pyspark.sql.functions as F
 
@@ -350,13 +348,8 @@ def test_pareto_skyline_no_single_partition_exchange(plans):
     assert "BroadcastHashJoin" in p
 
 
-def test_weighted_median_no_single_partition_exchange(spark, sf_dir):
-    # assert the PRE-checkpoint plan (the query wrapper collapses to
-    # Scan ExistingRDD after localCheckpoint)
-    from loan_etl_data_pipeline_spark.queries import _weighted_median_build
-
-    out, c = _weighted_median_build(spark, sf_dir)
-    p = out._jdf.queryExecution().executedPlan().toString()
+def test_weighted_median_no_single_partition_exchange(plans):
+    p = plans("q_weighted_median")
     # the cumsum rides range partitions with __pid-partitioned windows;
     # SinglePartition exchanges exist only as scalar-aggregate reduces
     # (sum(w) total, final min) moving nparts rows each
@@ -364,8 +357,6 @@ def test_weighted_median_no_single_partition_exchange(spark, sf_dir):
     for line in p.splitlines():
         if "Window " in line:
             assert "__pid" in line, line
-    from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
-    release_intermediates(c)
 
 
 def test_rrf_windows_partitioned_by_nation(plans):
@@ -382,13 +373,10 @@ def test_proration_single_group_shuffle(plans):
     assert "Exchange SinglePartition" not in p
 
 
-def test_cusum_fact_aggregates_before_range_shuffle(spark, sf_dir):
+def test_cusum_fact_aggregates_before_range_shuffle(plans):
     # the fact table collapses to the daily aggregate BEFORE the two
     # tiny range shuffles; no SinglePartition funnel anywhere
-    from loan_etl_data_pipeline_spark.queries import _cusum_build
-
-    out, frames = _cusum_build(spark, sf_dir)
-    p = out._jdf.queryExecution().executedPlan().toString()
+    p = plans("q_cusum_changepoint")
     # SinglePartition appears only as the (n, tot) scalar reduce; both
     # cumsum windows are __pid-partitioned over range partitions
     assert "rangepartitioning" in p
@@ -396,9 +384,6 @@ def test_cusum_fact_aggregates_before_range_shuffle(spark, sf_dir):
         if "Window " in line:
             assert "__pid" in line, line
     assert "TakeOrderedAndProject" in p
-    from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
-    for f in frames:
-        release_intermediates(f)
 
 
 def test_benford_single_aggregation_pass(plans):
@@ -408,44 +393,27 @@ def test_benford_single_aggregation_pass(plans):
     assert "SortMergeJoin" not in p
 
 
-def _assert_ranged_pid_windows(out, frames):
-    from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
-
-    p = out._jdf.queryExecution().executedPlan().toString()
+def _assert_ranged_pid_windows(p):
     assert "rangepartitioning" in p
     for line in p.splitlines():
         if "Window " in line:
             assert "__pid" in line, line
-    for f in frames:
-        release_intermediates(f)
 
 
-def test_ks_test_rides_range_partitions(spark, sf_dir):
-    from loan_etl_data_pipeline_spark.queries import _ks_test_build
-
-    out, frames = _ks_test_build(spark, sf_dir)
-    _assert_ranged_pid_windows(out, frames)
+def test_ks_test_rides_range_partitions(plans):
+    _assert_ranged_pid_windows(plans("q_ks_test"))
 
 
-def test_abc_classes_ride_range_partitions(spark, sf_dir):
-    from loan_etl_data_pipeline_spark.queries import _abc_build
-
-    out, frames = _abc_build(spark, sf_dir)
-    _assert_ranged_pid_windows(out, frames)
+def test_abc_classes_ride_range_partitions(plans):
+    _assert_ranged_pid_windows(plans("q_abc_parts"))
 
 
-def test_pareto_8020_rides_range_partitions(spark, sf_dir):
-    from loan_etl_data_pipeline_spark.queries import _pareto_8020_build
-
-    out, frames = _pareto_8020_build(spark, sf_dir)
-    _assert_ranged_pid_windows(out, frames)
+def test_pareto_8020_rides_range_partitions(plans):
+    _assert_ranged_pid_windows(plans("q_pareto_8020"))
 
 
-def test_peak_concurrency_rides_range_partitions(spark, sf_dir):
-    from loan_etl_data_pipeline_spark.queries import _peak_concurrency_build
-
-    out, frames = _peak_concurrency_build(spark, sf_dir)
-    _assert_ranged_pid_windows(out, frames)
+def test_peak_concurrency_rides_range_partitions(plans):
+    _assert_ranged_pid_windows(plans("q_peak_concurrency"))
 
 
 def test_chi2_scan_prunes_to_two_columns(plans):

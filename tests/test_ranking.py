@@ -12,6 +12,7 @@ from loan_etl_data_pipeline_spark.functions.ranking import (
     global_rank,
     ntile_from_rank,
 )
+from loan_etl_data_pipeline_spark.session import intermediates
 
 
 @pytest.fixture(scope="module")
@@ -106,27 +107,25 @@ def test_equidepth_bucketing_is_balanced(spark):
     bucket sizes within 1 of each other and contiguous value ranges."""
     import pyspark.sql.functions as F
     from loan_etl_data_pipeline_spark.functions.ranking import global_rank
-    from loan_etl_data_pipeline_spark.operators.dedup import (
-        release_intermediates,
-    )
+    from loan_etl_data_pipeline_spark.session import intermediates
 
     df = spark.range(103).select(
         (F.col("id") * 37 % 103).alias("v"), F.col("id").alias("k")
     )
-    ranked = global_rank(df, [F.asc("v"), F.asc("k")], total_col="nt")
-    out = (
-        ranked.withColumn(
-            "bucket", F.expr("cast(((rank - 1) * 8) div nt as bigint)")
+    with intermediates():
+        ranked = global_rank(df, [F.asc("v"), F.asc("k")], total_col="nt")
+        out = (
+            ranked.withColumn(
+                "bucket", F.expr("cast(((rank - 1) * 8) div nt as bigint)")
+            )
+            .groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.min("v").alias("lo"),
+                F.max("v").alias("hi"),
+            )
         )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-    )
-    release_intermediates(ranked)  # no-op since opt r8; must not break
-    rows = sorted(out.collect(), key=lambda r: r["bucket"])
+        rows = sorted(out.collect(), key=lambda r: r["bucket"])
     assert [r["bucket"] for r in rows] == list(range(8))
     sizes = [r["cnt"] for r in rows]
     assert sum(sizes) == 103 and max(sizes) - min(sizes) <= 1
@@ -208,12 +207,15 @@ def test_global_rank_plan_shape(spark, scored):
        boundaries and desynchronize offsets from positions.
     """
     tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    ranked = global_rank(scored, [F.asc("score"), F.asc("id")], rank_col="rk")
-    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-    assert jobs_after == jobs_before, "global_rank must not run jobs at build"
-    ranked.collect()
-    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    with intermediates():
+        jobs_before = len(tracker.getJobIdsForGroup(None) or [])
+        ranked = global_rank(
+            scored, [F.asc("score"), F.asc("id")], rank_col="rk"
+        )
+        jobs_after = len(tracker.getJobIdsForGroup(None) or [])
+        assert jobs_after == jobs_before, "global_rank must not run jobs at build"
+        ranked.collect()
+        plan = ranked._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "Window" not in final, f"window form crept back:\n{final[:3000]}"
     assert "SinglePartition" not in final, final[:3000]
@@ -230,8 +232,6 @@ def test_global_rank_plan_shape(spark, scored):
         f"rows branch re-shuffled instead of reading the cache:"
         f"\n{final[:3000]}"
     )
-    for f in getattr(ranked, "_persisted_intermediates", ()):
-        f.unpersist()
 
 
 def test_global_rank_consistent_under_pruned_multi_consumption(spark):
@@ -247,15 +247,14 @@ def test_global_rank_consistent_under_pruned_multi_consumption(spark):
         "cast((id * 7919) % 1000 as long) AS v",
         "cast(id % 7 as long) AS payload",
     )
-    ranked = global_rank(df, [F.asc("v"), F.asc("id")], rank_col="rk")
-    # consumer A: needs payload; consumer B: rank only (prunes payload)
-    a = ranked.groupBy("payload").agg(F.sum("rk").alias("s"))
-    b = ranked.agg(F.sum("rk").alias("t"))
-    joined = a.agg(F.sum("s").alias("sa")).crossJoin(b).collect()[0]
+    with intermediates():
+        ranked = global_rank(df, [F.asc("v"), F.asc("id")], rank_col="rk")
+        # consumer A: needs payload; consumer B: rank only (prunes payload)
+        a = ranked.groupBy("payload").agg(F.sum("rk").alias("s"))
+        b = ranked.agg(F.sum("rk").alias("t"))
+        joined = a.agg(F.sum("s").alias("sa")).crossJoin(b).collect()[0]
     n = 5000
     assert joined["sa"] == joined["t"] == n * (n + 1) // 2
-    for f in getattr(ranked, "_persisted_intermediates", ()):
-        f.unpersist()
 
 
 def test_global_cumsum_null_raises_at_action(spark):

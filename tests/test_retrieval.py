@@ -94,16 +94,15 @@ class TestTfidfTopTerms:
 
 class TestContainment:
     def test_subset_scores_one(self, spark):
-        from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
+        from loan_etl_data_pipeline_spark.session import intermediates
 
         # doc 2's grams are a strict subset of doc 1's -> containment 1.0,
         # while Jaccard would be 2/5
         df = spark.createDataFrame(
             [(1, "a b c d e f"), (2, "a b c d")], ["doc_id", "text"]
         )
-        out = ngram_containment_pairs(df, n=3, threshold=0.5)
-        rows = out.collect()
-        release_intermediates(out)
+        with intermediates():
+            rows = ngram_containment_pairs(df, n=3, threshold=0.5).collect()
         assert len(rows) == 1
         r = rows[0]
         assert (r["id_a"], r["id_b"]) == (1, 2)
@@ -111,16 +110,16 @@ class TestContainment:
         assert r["inter_size"] == 2 and r["size_a"] == 4 and r["size_b"] == 2
 
     def test_threshold_filters(self, spark):
-        from loan_etl_data_pipeline_spark.operators.dedup import release_intermediates
+        from loan_etl_data_pipeline_spark.session import intermediates
 
         df = spark.createDataFrame(
             [(1, "a b c x y z"), (2, "a b c q r s")], ["doc_id", "text"]
         )
         # share only gram "a b c": containment 1/4 < 0.5
         for thr, expect in [(0.5, 0), (0.25, 1)]:
-            out = ngram_containment_pairs(df, n=3, threshold=thr)
-            assert out.count() == expect
-            release_intermediates(out)
+            with intermediates():
+                out = ngram_containment_pairs(df, n=3, threshold=thr)
+                assert out.count() == expect
 
 
 class TestFuzzyBlockedJoin:

@@ -339,3 +339,78 @@ def test_threshold_scan_empty_when_bar_too_high(spark, sf_dir):
     )
     assert out.count() == 0
     assert out.columns == ["query_id", "corpus_id", "cosine"]
+
+
+# ---- Arrow boundary: null / ragged / double-typed embeddings ---------------
+
+
+@pytest.mark.parametrize(
+    "vectors, match",
+    [
+        ([[0.1, 0.2], None], "null embedding"),
+        ([[1.0, 2.0, 3.0], [1.0], [1.0, 2.0]], "ragged embedding"),
+    ],
+)
+def test_mat_rb_rejects_null_and_ragged_vectors(vectors, match):
+    """Both inputs used to reshape silently into a misaligned matrix
+    (2×1 and 3×2): the flatten drops nulls and reshape checks only the
+    total size."""
+    import pyarrow as pa
+
+    from loan_etl_data_pipeline_spark.operators.similarity import _mat_rb
+
+    with pytest.raises(ValueError, match=match):
+        _mat_rb(pa.array(vectors, pa.list_(pa.float64())))
+    with pytest.raises(ValueError, match=match):
+        _mat_rb(pa.chunked_array([pa.array(vectors, pa.list_(pa.float32()))]))
+
+
+def test_mat_rb_fixed_width_double_and_sliced():
+    import pyarrow as pa
+
+    from loan_etl_data_pipeline_spark.operators.similarity import _mat_rb
+
+    col = pa.array([[9.0], [1.0, 2.0], [3.0, 4.0]], pa.list_(pa.float64()))
+    np.testing.assert_array_equal(
+        _mat_rb(col.slice(1)), np.array([[1.0, 2.0], [3.0, 4.0]])
+    )
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [((2, None), "null embedding"), ((2, [0.5]), "ragged embedding")],
+)
+def test_threshold_scan_fails_loudly_on_bad_vectors(spark, bad, match):
+    from loan_etl_data_pipeline_spark.operators.similarity import (
+        cosine_threshold_scan,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), bad, (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    probe = spark.createDataFrame(
+        [(10, [1.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match=match):
+        cosine_threshold_scan(probe, corpus, threshold=0.1).collect()
+
+
+def test_neardup_lsh_double_embeddings_equal_float(spark):
+    """array<double> input narrows to the declared list<float> in the
+    bucket re-rank (pyarrow casts double→float32 without raising); on
+    float32-representable values the pairs and cosines must equal the
+    array<float> run exactly."""
+    df, dim = _neardup_corpus(spark)
+    dbl = df.select("vec_id", F.col("embedding").cast("array<double>"))
+    kw = dict(threshold=0.9, dim=dim, bands=16, planes_per_band=6)
+    want = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in cosine_neardup_lsh(df, **kw).collect()
+    }
+    got = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in cosine_neardup_lsh(dbl, **kw).collect()
+    }
+    assert len(want) >= 40
+    assert got == want
