@@ -24,11 +24,13 @@ its whole engine is single-table aggregates
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+# imported for its registrations: q_leakage_safe_split's oracle reuses
+# q_dup_components' SQL
+import loan_etl_data_pipeline_spark.queries  # noqa: F401
+from loan_etl_data_pipeline_spark.catalog import oracle, oracle_sql, query
 from loan_etl_data_pipeline_spark.functions.deterministic import dsum_sql
 from loan_etl_data_pipeline_spark.sources.tables import load_table
 from loan_etl_data_pipeline_spark.session import intermediates
@@ -39,6 +41,7 @@ _SEMANTIC_TAU = 0.25
 _PR_ITERS = 3
 
 
+@query
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document winnowing fingerprint summary (operators/text.py
     winnow_fingerprints, k=8, w=4): distinct-fp count plus an exact
@@ -70,6 +73,7 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs sharing ≥5 winnowing fingerprints after dropping
     stop-fingerprints with df > 20 (operators/text.py
@@ -95,6 +99,7 @@ def q_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-level SemDeDup (operators/similarity.py
     semantic_dedup): inside each ``label`` block, drop every vector
@@ -119,6 +124,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("vec_id", "label")
 
 
+@query
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 parts by integer-fixed-point PageRank over the symmetric
     co-purchase graph (operators/graph.py pagerank, 3 iterations,
@@ -145,6 +151,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_part_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profit by supplier nation × order year for widget-family parts
     (TPC-H-Q9-style; no partsupp in the testdata, so the supply cost is
@@ -193,6 +200,7 @@ def q_part_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL SemDeDup pipeline (Abbas et al. 2023): k-means the
     embeddings (deterministic Lloyd, operators/ivf.py), block on the
@@ -226,6 +234,7 @@ def q_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("vec_id", F.col("cell").cast("int").alias("cell"))
 
 
+@query
 def q_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding validity gate per label: wrong-dimension, NaN-bearing,
     and all-zero vectors counted in one narrow scan — the vector twin
@@ -260,6 +269,7 @@ def q_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-5 for 10 probes (operators/pq.py:
     m=8 subspaces × 64 codewords → 32× smaller scan than floats).
@@ -277,6 +287,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(q, emb, dim=64, k=5, m=8, ksub=64, iters=3)
 
 
+@query
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov transition counts of the per-user event stream: for each
     (event_type → next event_type) pair, how often it occurs.
@@ -302,6 +313,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-supplier variety per (brand, size) for selected part
     sizes, excluding negative-balance suppliers (TPC-H-Q16-style;
@@ -332,6 +344,7 @@ def q_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN hard-negative mining: for each probe vector, the top-3
     nearest neighbors with a DIFFERENT label — the contrastive-training
@@ -385,6 +398,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware train/test split: hash-split documents by their
     near-duplicate COMPONENT, not their own id — the leakage guard
@@ -413,6 +427,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-source percentile normalization of document length —
     quantile normalization across corpus feeds, so a "long doc" means
@@ -455,6 +470,7 @@ def q_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise vocabulary overlap between corpus sources: shared
     distinct tokens and the overlap coefficient |Va∩Vb|/min(|Va|,|Vb|)
@@ -499,6 +515,7 @@ def q_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix: predicted (operators/text.py
     lang_id) × golden ``lang`` label, one count per cell — the
@@ -519,6 +536,7 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_sliding_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users over a trailing 6-hour sliding window via HLL
     tumble-merge (functions/sketches.py sliding_distinct): raw events
@@ -537,6 +555,7 @@ def q_sliding_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_distinct(ev, "ts", "user_id", slide="1 hour", width_slides=6)
 
 
+@query
 def q_sliding_users_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distinct users over the trailing 6 OBSERVED hourly tumbles
     — the value-oracle sibling certifying q_sliding_users' HLL
@@ -576,6 +595,7 @@ def q_sliding_users_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ deterministic concatenation-offset packing
     (operators/packing.py pack_next_fit): corpus laid end to end in
@@ -589,6 +609,7 @@ def q_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_next_fit(d, capacity=2048, length_col="n_chars")
 
 
+@query
 def q_sole_returner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 suppliers who were the ONLY returner on multi-supplier
     orders (TPC-H-Q21-style; adapted — no commit/receipt dates in the
@@ -650,6 +671,7 @@ _PR_ITER_SQL = """
     )
 """
 
+@query
 def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4+ corpus LM quality scoring (operators/lm.py): train the
     add-one-smoothed bigram model on documents, score every document
@@ -668,6 +690,7 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_lm_score(d, model, vocab)
 
 
+@query
 def q_kn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4+ held-out Kneser–Ney quality scoring (operators/lm.py
     kneser_ney_train/score): train the interpolated-KN bigram model
@@ -689,6 +712,7 @@ def q_kn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kneser_ney_score(d, model, stats)
 
 
+@query
 def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ deterministic training-epoch shuffle (functions/splits.py
     epoch_shuffle): global pseudo-random position under
@@ -701,6 +725,7 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return epoch_shuffle(d, "doc_id", n_shards=8, salt="ep0")
 
 
+@query
 def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ per-source budget fill (functions/splits.py
     token_budget_select): biggest-first greedy prefix under a
@@ -712,6 +737,7 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_budget_select(d, "n_chars", 2000, by="source")
 
 
+@query
 def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2+ exact 3-gram-shingle-set Jaccard ≥ 1/2 via prefix filtering
     (operators/dedup.py prefix_jaccard_pairs): the PPJoin-style exact
@@ -733,6 +759,7 @@ def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_sparse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3+/E4+ sparse-vector retrieval (operators/retrieval.py
     sparse_topk): TF-IDF dot-product top-5 for probes doc_id < 10 as a
@@ -745,6 +772,7 @@ def q_sparse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sparse_topk(d.filter(F.col("doc_id") < 10), d, k=5)
 
 
+@query
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ temperature-scaled (α=0.5) source rebalancing
     (functions/splits.py temperature_sample): sample every source down
@@ -758,6 +786,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_sample(d, "doc_id", "source", budget=300, salt="tmix")
 
 
+@query
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.7 set-op completion: nation keys serving BOTH customers and
     suppliers (INTERSECT) and customer-only nations (EXCEPT), labeled
@@ -775,35 +804,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     only_c = c.subtract(s).select(F.lit("customer_only").alias("op"), "nationkey")
     return both.union(only_c)
 
-
-QUERIES_CURATION: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_winnow_fingerprint": q_winnow_fingerprint,
-    "q_winnow_neardup": q_winnow_neardup,
-    "q_semantic_dedup": q_semantic_dedup,
-    "q_pagerank": q_pagerank,
-    "q_part_profit": q_part_profit,
-    "q_event_transitions": q_event_transitions,
-    "q_supplier_variety": q_supplier_variety,
-    "q_pq_topk": q_pq_topk,
-    "q_semdedup_cells": q_semdedup_cells,
-    "q_embedding_quality": q_embedding_quality,
-    "q_sole_returner": q_sole_returner,
-    "q_sliding_users": q_sliding_users,
-    "q_langid_confusion": q_langid_confusion,
-    "q_vocab_overlap": q_vocab_overlap,
-    "q_quality_percentiles": q_quality_percentiles,
-    "q_hard_negatives": q_hard_negatives,
-    "q_leakage_safe_split": q_leakage_safe_split,
-    "q_bigram_lm": q_bigram_lm,
-    "q_epoch_shuffle": q_epoch_shuffle,
-    "q_token_budget": q_token_budget,
-    "q_prefix_jaccard": q_prefix_jaccard,
-    "q_sparse_topk": q_sparse_topk,
-    "q_temperature_mix": q_temperature_mix,
-    "q_set_ops": q_set_ops,
-    "q_sliding_users_exact": q_sliding_users_exact,
-    "q_pack_nextfit": q_pack_nextfit,
-}
 
 # hash_split's md5-bucket threshold for train_frac=0.8 (see
 # functions/splits.py: format(round(0.8 * 65536), "04x"))
@@ -832,8 +832,7 @@ _WINNOW_FPS_CTE = f"""
         )
 """
 
-ORACLE_CURATION: dict[str, str] = {
-    "q_bigram_lm": r"""
+oracle("q_bigram_lm", r"""
         WITH toks AS (
             SELECT doc_id,
                    regexp_split_to_array(trim(lower(text)), '\s+') AS l
@@ -868,8 +867,9 @@ ORACLE_CURATION: dict[str, str] = {
                coalesce(p.sum_p9, 0) AS sum_p9,
                CAST(p.sum_p9 AS DOUBLE) / CAST(p.n_bigrams AS DOUBLE) AS mean_p9
         FROM documents d LEFT JOIN per_doc p USING (doc_id)
-    """,
-    "q_epoch_shuffle": """
+    """)
+
+oracle("q_epoch_shuffle", """
         WITH ranked AS (
             SELECT doc_id,
                    ROW_NUMBER() OVER (
@@ -880,8 +880,9 @@ ORACLE_CURATION: dict[str, str] = {
             FROM documents
         )
         SELECT doc_id, pos, (pos - 1) % 8 AS shard FROM ranked
-    """,
-    "q_prefix_jaccard": r"""
+    """)
+
+oracle("q_prefix_jaccard", r"""
         WITH toks AS (
             SELECT doc_id,
                    regexp_split_to_array(trim(lower(text)), '\s+') AS t
@@ -912,8 +913,9 @@ ORACLE_CURATION: dict[str, str] = {
         JOIN szs sa ON id_a = sa.doc_id
         JOIN szs sb ON id_b = sb.doc_id
         WHERE 2 * inter_size >= 1 * (sa.sz + sb.sz - inter_size)
-    """,
-    "q_sparse_topk": r"""
+    """)
+
+oracle("q_sparse_topk", r"""
         WITH toks AS (
             SELECT doc_id,
                    UNNEST(regexp_split_to_array(trim(lower(text)), '\s+'))
@@ -948,8 +950,9 @@ ORACLE_CURATION: dict[str, str] = {
         )
         SELECT q_id AS query_id, c_id AS corpus_id, score, rnk
         FROM r WHERE rnk <= 5
-    """,
-    "q_temperature_mix": """
+    """)
+
+oracle("q_temperature_mix", """
         WITH cnt AS (
             SELECT source AS st, CAST(count(*) AS BIGINT) AS c
             FROM documents GROUP BY source
@@ -970,8 +973,9 @@ ORACLE_CURATION: dict[str, str] = {
         SELECT d.doc_id, d.source
         FROM documents d JOIN thr ON d.source = thr.st
         WHERE substr(md5(CAST(d.doc_id AS VARCHAR) || 'tmix'), 1, 4) < thr.t
-    """,
-    "q_sliding_users_exact": """
+    """)
+
+oracle("q_sliding_users_exact", """
         WITH pairs AS (
             SELECT DISTINCT date_trunc('hour', ts) AS h, user_id FROM events
         ), tumbles AS (
@@ -984,8 +988,9 @@ ORACLE_CURATION: dict[str, str] = {
         JOIN tumbles pt ON pt.rk <= t.rk AND pt.rk >= t.rk - 5
         JOIN pairs p ON p.h = pt.h
         GROUP BY t.h
-    """,
-    "q_pack_nextfit": """
+    """)
+
+oracle("q_pack_nextfit", """
         WITH c AS (
             SELECT doc_id, n_chars,
                    CAST(SUM(n_chars) OVER (ORDER BY doc_id
@@ -997,8 +1002,9 @@ ORACLE_CURATION: dict[str, str] = {
                CAST(cum - n_chars AS BIGINT) AS start_offset,
                (cum - n_chars) // 2048 AS pack_id
         FROM c
-    """,
-    "q_set_ops": """
+    """)
+
+oracle("q_set_ops", """
         WITH c AS (SELECT DISTINCT CAST(c_nationkey AS BIGINT) AS nationkey
                    FROM customer),
              s AS (SELECT DISTINCT CAST(s_nationkey AS BIGINT) AS nationkey
@@ -1008,8 +1014,9 @@ ORACLE_CURATION: dict[str, str] = {
         UNION ALL
         SELECT 'customer_only' AS op, nationkey
         FROM (SELECT nationkey FROM c EXCEPT SELECT nationkey FROM s)
-    """,
-    "q_token_budget": """
+    """)
+
+oracle("q_token_budget", """
         WITH c AS (
             SELECT doc_id, source, n_chars,
                    CAST(SUM(n_chars) OVER (
@@ -1021,8 +1028,9 @@ ORACLE_CURATION: dict[str, str] = {
         )
         SELECT doc_id, source, n_chars, cum_weight
         FROM c WHERE cum_weight <= 2000
-    """,
-    "q_winnow_fingerprint": f"""
+    """)
+
+oracle("q_winnow_fingerprint", f"""
         WITH {_WINNOW_FPS_CTE}
         SELECT doc_id,
                count(*) AS n_fp,
@@ -1030,8 +1038,9 @@ ORACLE_CURATION: dict[str, str] = {
                min(fp) AS fp_min,
                max(fp) AS fp_max
         FROM fps GROUP BY doc_id
-    """,
-    "q_winnow_neardup": f"""
+    """)
+
+oracle("q_winnow_neardup", f"""
         WITH {_WINNOW_FPS_CTE},
         keepfp AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 20)
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
@@ -1039,8 +1048,9 @@ ORACLE_CURATION: dict[str, str] = {
         JOIN keepfp k ON a.fp = k.fp
         JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
         GROUP BY 1, 2 HAVING count(*) >= 5
-    """,
-    "q_semantic_dedup": f"""
+    """)
+
+oracle("q_semantic_dedup", f"""
         WITH v AS (SELECT vec_id, label, embedding FROM embeddings),
         nrm AS (
             SELECT vec_id,
@@ -1072,8 +1082,9 @@ ORACLE_CURATION: dict[str, str] = {
         )
         SELECT vec_id, label FROM v
         WHERE NOT EXISTS (SELECT 1 FROM dropped WHERE dropped.ib = v.vec_id)
-    """,
-    "q_pagerank": f"""
+    """)
+
+oracle("q_pagerank", f"""
         WITH {_COPURCHASE_CTE_SQL},
         odeg AS (SELECT u, count(*) AS odeg FROM e GROUP BY u),
         nodes AS (SELECT DISTINCT u AS id FROM e),
@@ -1087,8 +1098,9 @@ ORACLE_CURATION: dict[str, str] = {
         {_PR_ITER_SQL.format(cur="p3", prev="p2")}
         SELECT CAST(id AS BIGINT) AS part, CAST(pr AS BIGINT) AS pr
         FROM p3 ORDER BY pr DESC, id ASC LIMIT 20
-    """,
-    "q_hard_negatives": """
+    """)
+
+oracle("q_hard_negatives", """
         WITH q AS (SELECT vec_id AS query_id, label AS ql, embedding AS qe
                    FROM embeddings WHERE vec_id < 10),
         c AS (SELECT vec_id AS neighbor_id, label AS cl, embedding AS ce
@@ -1118,14 +1130,16 @@ ORACLE_CURATION: dict[str, str] = {
                         AS BIGINT) AS rank
             FROM cos
         ) WHERE rank <= 3
-    """,
-    "q_quality_percentiles": """
+    """)
+
+oracle("q_quality_percentiles", """
         SELECT doc_id, source, n_chars,
                percent_rank() OVER (PARTITION BY source
                                     ORDER BY n_chars, doc_id) AS pct_in_source
         FROM documents
-    """,
-    "q_vocab_overlap": """
+    """)
+
+oracle("q_vocab_overlap", """
         WITH vocab AS (
             SELECT DISTINCT source,
                    UNNEST(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
@@ -1142,8 +1156,9 @@ ORACLE_CURATION: dict[str, str] = {
         FROM shared
         JOIN sizes sa ON sa.source = shared.src_a
         JOIN sizes sb ON sb.source = shared.src_b
-    """,
-    "q_langid_confusion": """
+    """)
+
+oracle("q_langid_confusion", """
         WITH t AS (
             SELECT doc_id,
                    regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
@@ -1167,8 +1182,9 @@ ORACLE_CURATION: dict[str, str] = {
         SELECT d.lang, p.lang_pred, count(*) AS n_docs
         FROM documents d JOIN pred p USING (doc_id)
         GROUP BY 1, 2
-    """,
-    "q_sole_returner": """
+    """)
+
+oracle("q_sole_returner", """
         WITH per_os AS (
             SELECT l_orderkey, l_suppkey,
                    max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ret
@@ -1184,8 +1200,9 @@ ORACLE_CURATION: dict[str, str] = {
         WHERE ret = 1 AND n_supp >= 2 AND n_ret = 1
         GROUP BY s_name
         ORDER BY n_orders DESC, s_name ASC LIMIT 10
-    """,
-    "q_embedding_quality": """
+    """)
+
+oracle("q_embedding_quality", """
         SELECT label,
                count(*) AS n_vectors,
                CAST(SUM(CASE WHEN len(embedding) <> 64 THEN 1 ELSE 0 END)
@@ -1197,8 +1214,9 @@ ORACLE_CURATION: dict[str, str] = {
                                  x -> abs(CAST(x AS DOUBLE)))) = 0.0
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_zero
         FROM embeddings GROUP BY label
-    """,
-    "q_event_transitions": """
+    """)
+
+oracle("q_event_transitions", """
         WITH s AS (
             SELECT user_id, event_type,
                    lead(event_type) OVER (PARTITION BY user_id
@@ -1207,8 +1225,9 @@ ORACLE_CURATION: dict[str, str] = {
         )
         SELECT event_type AS from_type, to_type, count(*) AS n
         FROM s WHERE to_type IS NOT NULL GROUP BY 1, 2
-    """,
-    "q_supplier_variety": """
+    """)
+
+oracle("q_supplier_variety", """
         SELECT p_brand, p_size,
                CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers
         FROM lineitem
@@ -1217,8 +1236,9 @@ ORACLE_CURATION: dict[str, str] = {
           AND NOT EXISTS (SELECT 1 FROM supplier
                           WHERE s_suppkey = l_suppkey AND s_acctbal < 0)
         GROUP BY 1, 2
-    """,
-    "q_part_profit": f"""
+    """)
+
+oracle("q_part_profit", f"""
         SELECT n_name AS nation,
                CAST(year(o_orderdate) AS INTEGER) AS o_year,
                {dsum_sql("l_extendedprice * (1 - l_discount)"
@@ -1229,32 +1249,27 @@ ORACLE_CURATION: dict[str, str] = {
         JOIN nation ON s_nationkey = n_nationkey
         JOIN orders ON l_orderkey = o_orderkey
         GROUP BY 1, 2
-    """,
-}
+    """)
 
 
 # The components construction is certified by q_dup_components' oracle;
-# reuse that exact SQL as a CTE (import is circular-safe: queries.py
-# only imports this module lazily inside all_queries/all_oracles).
-from loan_etl_data_pipeline_spark.queries import ORACLE_PART_B as _OPB  # noqa: E402
-
-ORACLE_CURATION["q_leakage_safe_split"] = f"""
-    WITH comps AS ({_OPB["q_dup_components"]})
+# reuse that exact SQL as a CTE.
+oracle("q_leakage_safe_split", f"""
+    WITH comps AS ({oracle_sql("q_dup_components")})
     SELECT d.doc_id,
            COALESCE(c.component, d.doc_id) AS component,
            CASE WHEN substr(md5(CAST(COALESCE(c.component, d.doc_id) AS VARCHAR)
                                 || ''), 1, 4) < '{_SPLIT_THR_80}'
                 THEN 'train' ELSE 'test' END AS split
     FROM documents d LEFT JOIN comps c ON c.id = d.doc_id
-"""
+""")
 
 
-QUERIES_CURATION["q_kn_lm"] = q_kn_lm
 # Interpolated Kneser–Ney with D=3/4 over the even-doc_id training half:
 # p9 = (max(4·c12−3,0)·(nct+v) + 3·n1p·(ncont+1))·1e9 // (4·c1·(nct+v)),
 # all HUGEINT (the numerator passes int64 even at sf0.01) — DuckDB //
 # and Spark DECIMAL(38,0) div truncate identically on positives.
-ORACLE_CURATION["q_kn_lm"] = r"""
+oracle("q_kn_lm", r"""
     WITH toks AS (
         SELECT doc_id,
                regexp_split_to_array(trim(lower(text)), '\s+') AS l
@@ -1312,9 +1327,10 @@ ORACLE_CURATION["q_kn_lm"] = r"""
            coalesce(p.sum_p9, 0) AS sum_p9,
            CAST(p.sum_p9 AS DOUBLE) / CAST(p.n_bigrams AS DOUBLE) AS mean_p9
     FROM documents d LEFT JOIN per_doc p USING (doc_id)
-"""
+""")
 
 
+@query
 def q_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ maximum spanning forest of the nation trade graph
     (operators/graph.py boruvka_msf): nodes = nations, edge weight =
@@ -1413,8 +1429,7 @@ def _msf_oracle(rounds: int = 5) -> str:
     return "".join(parts)
 
 
-QUERIES_CURATION["q_msf"] = q_msf
-ORACLE_CURATION["q_msf"] = _msf_oracle()
+oracle("q_msf", _msf_oracle())
 
 
 def _monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,6 +1458,7 @@ _MONTHLY_SQL = """
 """
 
 
+@query
 def q_seasonal_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ classical additive seasonal decomposition by moving
     averages over the monthly revenue series: trend = the 2×12
@@ -1464,8 +1480,7 @@ def q_seasonal_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_seasonal_decomp"] = q_seasonal_decomp
-ORACLE_CURATION["q_seasonal_decomp"] = f"""
+oracle("q_seasonal_decomp", f"""
     WITH monthly AS MATERIALIZED ({_MONTHLY_SQL}),
     t AS MATERIALIZED (
         SELECT ym, cents,
@@ -1491,9 +1506,10 @@ ORACLE_CURATION["q_seasonal_decomp"] = f"""
            CAST(d.det24 * s.s_n - s.s_sum AS DOUBLE)
              / CAST(24 * s.s_n AS DOUBLE) AS resid
     FROM det d LEFT JOIN seas s USING (moy)
-"""
+""")
 
 
+@query
 def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Theil–Sen robust trend: the median of all pairwise slopes
     of the monthly revenue series — breakdown point 29%, immune to the
@@ -1510,8 +1526,7 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return theil_sen(_monthly_revenue(spark, sf_dir), "ym", "cents")
 
 
-QUERIES_CURATION["q_theil_sen"] = q_theil_sen
-ORACLE_CURATION["q_theil_sen"] = f"""
+oracle("q_theil_sen", f"""
     WITH monthly AS MATERIALIZED ({_MONTHLY_SQL}),
     slopes AS MATERIALIZED (
         SELECT CAST(b.cents - a.cents AS DOUBLE)
@@ -1526,9 +1541,10 @@ ORACLE_CURATION["q_theil_sen"] = f"""
     FROM ranked
     WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
     GROUP BY n
-"""
+""")
 
 
+@query
 def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ cross-source quantile normalization
     (functions/ranking.py quantile_normalize): every document's length
@@ -1548,8 +1564,7 @@ def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantile_normalize(d, "n_chars", "source", "doc_id")
 
 
-QUERIES_CURATION["q_quantile_norm"] = q_quantile_norm
-ORACLE_CURATION["q_quantile_norm"] = """
+oracle("q_quantile_norm", """
     WITH d AS MATERIALIZED (SELECT doc_id, source, n_chars FROM documents),
     nt AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM d),
     sr AS MATERIALIZED (
@@ -1571,8 +1586,7 @@ ORACLE_CURATION["q_quantile_norm"] = """
     JOIN pooled p
       ON p.j = greatest(((2 * sr.r - 1) * nt.nt + 2 * sr.n - 1)
                           // (2 * sr.n), 1)
-"""
-
+""")
 
 
 def _positional_index(spark: SparkSession, sf_dir: str) -> str:
@@ -1641,6 +1655,7 @@ def _positional_index(spark: SparkSession, sf_dir: str) -> str:
 _POSIDX_CLEANUP: set[str] = set()
 
 
+@query
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4+ positional-index phrase search (operators/retrieval.py
     build_positional_index / phrase_count_indexed): build the
@@ -1661,8 +1676,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("id").alias("doc_id"), "n_hits")
 
 
-QUERIES_CURATION["q_phrase_search"] = q_phrase_search
-ORACLE_CURATION["q_phrase_search"] = r"""
+oracle("q_phrase_search", r"""
     WITH toks AS (
         SELECT doc_id,
                regexp_split_to_array(trim(lower(text)), '\s+') AS l
@@ -1676,9 +1690,10 @@ ORACLE_CURATION["q_phrase_search"] = r"""
     )
     SELECT doc_id, CAST(n_hits AS BIGINT) AS n_hits
     FROM hits WHERE n_hits > 0
-"""
+""")
 
 
+@query
 def q_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4+ NEAR/k proximity search from the positional index
     (operators/retrieval.py proximity_count_indexed): per document,
@@ -1698,8 +1713,7 @@ def q_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("id").alias("doc_id"), "n_hits")
 
 
-QUERIES_CURATION["q_proximity_search"] = q_proximity_search
-ORACLE_CURATION["q_proximity_search"] = r"""
+oracle("q_proximity_search", r"""
     WITH toks AS (
         SELECT doc_id,
                regexp_split_to_array(trim(lower(text)), '\s+') AS l
@@ -1717,9 +1731,10 @@ ORACLE_CURATION["q_proximity_search"] = r"""
     FROM pa JOIN pb ON pa.doc_id = pb.doc_id
     WHERE abs(pa.p - pb.p) <= 3 AND pa.p <> pb.p
     GROUP BY pa.doc_id
-"""
+""")
 
 
+@query
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E5+/E2 image near-dup by perceptual hash
     (operators/multimodal.py phash_media + operators/dedup.py
@@ -1758,9 +1773,7 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_phash_neardup"] = q_phash_neardup
-
-
+@query
 def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ count–min sketch (functions/sketches.py cms_build/cms_query):
     4×256-cell frequency sketch over lineitem part keys, point-queried
@@ -1785,8 +1798,7 @@ def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms_query(sketch, keys, "partkey", depth=4, width=256)
 
 
-QUERIES_CURATION["q_cms_freq"] = q_cms_freq
-ORACLE_CURATION["q_cms_freq"] = """
+oracle("q_cms_freq", """
     WITH d(row) AS (VALUES (0), (1), (2), (3)),
     cells AS MATERIALIZED (
         SELECT d.row AS row,
@@ -1808,9 +1820,10 @@ ORACLE_CURATION["q_cms_freq"] = """
     SELECT partkey, CAST(min(coalesce(cnt, 0)) AS BIGINT) AS est
     FROM probes LEFT JOIN cells USING (row, col)
     GROUP BY partkey
-"""
+""")
 
 
+@query
 def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4+ keyword-in-context concordance (operators/retrieval.py
     kwic_indexed): every occurrence of "vector" with its ±2-token
@@ -1827,8 +1840,7 @@ def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_kwic"] = q_kwic
-ORACLE_CURATION["q_kwic"] = r"""
+oracle("q_kwic", r"""
     WITH toks AS (
         SELECT doc_id,
                regexp_split_to_array(trim(lower(text)), '\s+') AS l
@@ -1843,9 +1855,10 @@ ORACLE_CURATION["q_kwic"] = r"""
                l[CAST(greatest(i - 2, 1) AS INTEGER)
                  : CAST(least(i + 2, len(l)) AS INTEGER)], ' ') AS snippet
     FROM hits
-"""
+""")
 
 
+@query
 def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9/E4 corpus DATA CARD: the one-row model-card-style summary a
     dataset release ships — size (docs/tokens/vocabulary), exact-dup
@@ -1918,8 +1931,7 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_data_card"] = q_data_card
-ORACLE_CURATION["q_data_card"] = r"""
+oracle("q_data_card", r"""
     WITH t AS MATERIALIZED (
         SELECT doc_id, n_chars,
                regexp_split_to_array(trim(lower(text)), '\s+') AS toks,
@@ -1958,9 +1970,10 @@ ORACLE_CURATION["q_data_card"] = r"""
            (n_en * 1000000000) // n_docs AS share_en9,
            median_chars, p90_chars
     FROM size_stats, vocab, lang, med, p90
-"""
+""")
 
 
+@query
 def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2+ ER blocking-quality evaluation: recall and pair-precision of
     sorted-neighborhood blocking (window 6) against the COMPLETE
@@ -2007,8 +2020,7 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_blocking_eval"] = q_blocking_eval
-ORACLE_CURATION["q_blocking_eval"] = """
+oracle("q_blocking_eval", """
     WITH c AS MATERIALIZED (
         SELECT c_custkey AS id, c_name AS name
         FROM customer WHERE c_custkey < 1500
@@ -2033,9 +2045,10 @@ ORACLE_CURATION["q_blocking_eval"] = """
            (n_hit * 1000000000) // n_truth AS recall9,
            (n_hit * 1000000000) // n_cand AS precision9
     FROM agg
-"""
+""")
 
 
+@query
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ isotonic calibration (operators/quality.py isotonic_fit):
     PAVA over the discount-bucket return-rate curve — the monotone fix
@@ -2112,10 +2125,10 @@ def _isotonic_oracle(rounds: int = 12) -> str:
     return "".join(parts)
 
 
-QUERIES_CURATION["q_isotonic_calibration"] = q_isotonic_calibration
-ORACLE_CURATION["q_isotonic_calibration"] = _isotonic_oracle()
+oracle("q_isotonic_calibration", _isotonic_oracle())
 
 
+@query
 def q_jaccard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 dedup threshold-selection curve: how many near-dup pairs a
     3-gram Jaccard threshold of 0.1…0.9 would flag — the measurement
@@ -2148,8 +2161,7 @@ def q_jaccard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_jaccard_curve"] = q_jaccard_curve
-ORACLE_CURATION["q_jaccard_curve"] = r"""
+oracle("q_jaccard_curve", r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
         FROM documents
@@ -2181,9 +2193,10 @@ ORACLE_CURATION["q_jaccard_curve"] = r"""
            CAST(count(*) AS BIGINT) AS n_pairs
     FROM pairs JOIN d ON inter_size * 10 >= thr_decile * u
     GROUP BY 1
-"""
+""")
 
 
+@query
 def q_homoglyph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1+/E4 homoglyph-spam dedup (operators/text.py
     normalize_confusables): every 25th document re-appears with its
@@ -2226,8 +2239,7 @@ def q_homoglyph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ledger.select("keep_id", "dup_count", "n_raw_variants")
 
 
-QUERIES_CURATION["q_homoglyph_dedup"] = q_homoglyph_dedup
-ORACLE_CURATION["q_homoglyph_dedup"] = r"""
+oracle("q_homoglyph_dedup", r"""
     WITH pool AS (
         SELECT doc_id, text FROM documents
         UNION ALL
@@ -2248,9 +2260,10 @@ ORACLE_CURATION["q_homoglyph_dedup"] = r"""
     FROM fps
     GROUP BY fp
     HAVING count(*) > 1
-"""
+""")
 
 
+@query
 def q_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 tokenizer fertility by detected language: chars-per-token per
     lang_id bucket — the multilingual budgeting metric (a language
@@ -2291,8 +2304,7 @@ def q_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_CURATION["q_lang_fertility"] = q_lang_fertility
-ORACLE_CURATION["q_lang_fertility"] = r"""
+oracle("q_lang_fertility", r"""
     WITH t AS (
         SELECT doc_id, n_chars,
                regexp_split_to_array(trim(lower(text)), '\s+') AS toks
@@ -2318,4 +2330,4 @@ ORACLE_CURATION["q_lang_fertility"] = r"""
            CAST(SUM(n_chars) AS BIGINT) AS n_chars,
            CAST((SUM(n_chars) * 1000000000) // SUM(nt) AS BIGINT) AS chars_per_token9
     FROM lbl GROUP BY lang
-"""
+""")

@@ -21,18 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loan_etl_data_pipeline_spark.catalog import oracle, query
 from loan_etl_data_pipeline_spark.sources.tables import load_table
-
-QUERIES_R7: dict = {}
-ORACLE_R7: dict[str, str] = {}
-
-
-def _q(name):
-    def reg(fn):
-        QUERIES_R7[name] = fn
-        return fn
-
-    return reg
 
 
 # shared limb-split SQL fragment (textual copy of queries._limb — one
@@ -61,7 +51,7 @@ def _limb(c: str):
 # ---------------------------------------------------------------------------
 
 
-@_q("q_vwap")
+@query
 def q_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ daily volume-weighted average price: Σ(extendedprice) /
     Σ(quantity) per ship day in exact integers (floor-cents revenue,
@@ -91,7 +81,7 @@ def q_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_vwap"] = """
+oracle("q_vwap", """
     SELECT CAST(l_shipdate AS DATE) AS day,
            CAST(sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
              AS price_cents,
@@ -100,10 +90,10 @@ ORACLE_R7["q_vwap"] = """
              / CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS DOUBLE)
              AS vwap_cents
     FROM lineitem GROUP BY day
-"""
+""")
 
 
-@_q("q_turning_points")
+@query
 def q_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ turning-point test for serial randomness: count strict
     local maxima/minima of the daily-revenue series against the i.i.d.
@@ -144,7 +134,7 @@ def q_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_turning_points"] = """
+oracle("q_turning_points", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS cents
@@ -168,10 +158,10 @@ ORACLE_R7["q_turning_points"] = """
            CAST(n_peaks + n_troughs AS BIGINT) AS n_turning,
            2.0 * CAST(n_days - 2 AS DOUBLE) / 3.0 AS expected_turning
     FROM agg
-"""
+""")
 
 
-@_q("q_page_hinkley")
+@query
 def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Page–Hinkley change detection over daily revenue: the
     cumulative deviation-from-running-mean path m_t = Σ_{i≤t}
@@ -208,7 +198,7 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_page_hinkley"] = """
+oracle("q_page_hinkley", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS cents
@@ -233,7 +223,7 @@ ORACLE_R7["q_page_hinkley"] = """
     SELECT agg.n_days, CAST(agg.m_max - agg.m_min AS BIGINT) AS ph_range,
            (SELECT min(day) FROM m, agg a2 WHERE m.m = a2.m_max) AS peak_day
     FROM agg
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +231,7 @@ ORACLE_R7["q_page_hinkley"] = """
 # ---------------------------------------------------------------------------
 
 
-@_q("q_cliffs_delta")
+@query
 def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Cliff's delta ordinal effect size between returned ('R')
     and accepted ('A') line items on exact price cents: δ = (#(x>y) −
@@ -296,7 +286,7 @@ def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_cliffs_delta"] = f"""
+oracle("q_cliffs_delta", f"""
     WITH li AS (
         SELECT l_returnflag AS f,
                CAST(floor(l_extendedprice * 100) AS BIGINT) AS v
@@ -326,10 +316,10 @@ ORACLE_R7["q_cliffs_delta"] = f"""
            (({_limb_sql('gt')}) - ({_limb_sql('lt')}))
              / (CAST(n_r AS DOUBLE) * CAST(n_a AS DOUBLE)) AS cliffs_delta
     FROM agg
-"""
+""")
 
 
-@_q("q_cohens_d")
+@query
 def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Cohen's d effect size between returned ('R') and accepted
     ('A') line-item prices: the parametric twin of q_cliffs_delta.
@@ -373,7 +363,7 @@ def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_cohens_d"] = f"""
+oracle("q_cohens_d", f"""
     WITH li AS (
         SELECT l_returnflag AS f,
                CAST(floor(l_extendedprice * 100) AS BIGINT) AS v
@@ -401,7 +391,7 @@ ORACLE_R7["q_cohens_d"] = f"""
                    / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0)))
              AS cohens_d
     FROM m
-"""
+""")
 
 
 def _priority_price_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,7 +424,7 @@ def _priority_price_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("q_weighted_kappa")
+@query
 def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ quadratic-weighted Cohen's kappa between two ordinal
     "raters" of an order: its priority class (1..5) and its price
@@ -488,7 +478,7 @@ def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_weighted_kappa"] = f"""
+oracle("q_weighted_kappa", f"""
     WITH o AS (
         SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS r1,
                CAST(ntile(5) OVER (ORDER BY
@@ -512,10 +502,10 @@ ORACLE_R7["q_weighted_kappa"] = f"""
            1.0 - CAST(n.n AS DOUBLE) * ({_limb_sql('wo')})
                  / ({_limb_sql('we')}) AS weighted_kappa
     FROM n, obs, expct
-"""
+""")
 
 
-@_q("q_gk_gamma")
+@query
 def q_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Goodman–Kruskal gamma between order priority (1..5) and
     line-item quantity — ordinal association from concordant vs
@@ -562,7 +552,7 @@ def q_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_gk_gamma"] = f"""
+oracle("q_gk_gamma", f"""
     WITH cells AS (
         SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS x,
                CAST(floor(l_quantity) AS BIGINT) AS y,
@@ -583,10 +573,10 @@ ORACLE_R7["q_gk_gamma"] = f"""
            (({_limb_sql('c')}) - ({_limb_sql('d')}))
              / (({_limb_sql('c')}) + ({_limb_sql('d')})) AS gamma
     FROM agg
-"""
+""")
 
 
-@_q("q_tvd_weekend")
+@query
 def q_tvd_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8+ total-variation drift between the weekday and weekend
     event-type mixes: TVD = ½ Σ_i |p_i − q_i| — the exact companion to
@@ -634,7 +624,7 @@ def q_tvd_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_tvd_weekend"] = f"""
+oracle("q_tvd_weekend", f"""
     WITH ev AS (
         SELECT event_type,
                CASE WHEN date_part('isodow', ts) >= 6 THEN 1 ELSE 0 END AS is_we
@@ -660,10 +650,10 @@ ORACLE_R7["q_tvd_weekend"] = f"""
              / (2.0 * CAST(n_weekday AS DOUBLE) * CAST(n_weekend AS DOUBLE))
              AS tvd
     FROM agg
-"""
+""")
 
 
-@_q("q_bhattacharyya")
+@query
 def q_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8+ Bhattacharyya coefficient between the URGENT and LOW price
     histograms ($5000 buckets over exact cents): BC = Σ √(p_i q_i), the
@@ -707,7 +697,7 @@ def q_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_bhattacharyya"] = """
+oracle("q_bhattacharyya", """
     WITH o AS (
         SELECT o_orderpriority AS p,
                CAST(floor(o_totalprice * 100) AS BIGINT) // 500000 AS b
@@ -729,10 +719,10 @@ ORACLE_R7["q_bhattacharyya"] = """
         FROM per, tot
     )
     SELECT n_bins, bc_q, CAST(bc_q AS DOUBLE) / 1.0e9 AS bc FROM agg
-"""
+""")
 
 
-@_q("q_poisson_dispersion")
+@query
 def q_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8+ dispersion index (variance-to-mean ratio) of daily event
     counts per event type — the Poisson-ness screen that decides
@@ -768,7 +758,7 @@ def q_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-ORACLE_R7["q_poisson_dispersion"] = f"""
+oracle("q_poisson_dispersion", f"""
     WITH ev AS (
         SELECT event_type, CAST(ts AS DATE) AS day,
                CAST(count(*) AS BIGINT) AS x
@@ -788,10 +778,10 @@ ORACLE_R7["q_poisson_dispersion"] = f"""
            / ((CAST(n_days AS DOUBLE) - 1.0) * CAST(sx AS DOUBLE))
              AS dispersion
     FROM m ORDER BY event_type
-"""
+""")
 
 
-@_q("q_kish_ess")
+@query
 def q_kish_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.9+ Kish effective sample size of price-weighted order samples
     per priority class: ESS = (Σw)²/Σw² — the design-effect diagnostic
@@ -821,7 +811,7 @@ def q_kish_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority")
 
 
-ORACLE_R7["q_kish_ess"] = f"""
+oracle("q_kish_ess", f"""
     WITH m AS (
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n,
@@ -835,10 +825,10 @@ ORACLE_R7["q_kish_ess"] = f"""
            (CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)) / ({_limb_sql('sww')})
              AS ess
     FROM m ORDER BY o_orderpriority
-"""
+""")
 
 
-@_q("q_l_diversity")
+@query
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8+ l-diversity audit — the governance gate k-anonymity misses:
     an equivalence class can hold plenty of rows yet expose everyone if
@@ -865,7 +855,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_l_diversity"] = """
+oracle("q_l_diversity", """
     SELECT CAST(c_nationkey AS BIGINT) AS nk, c_mktsegment,
            CAST(count(*) AS BIGINT) AS n,
            CAST(count(DISTINCT
@@ -875,7 +865,7 @@ ORACLE_R7["q_l_diversity"] = """
                CAST(floor(c_acctbal * 100) AS BIGINT) // 100000) AS BIGINT) < 3
              AS weak
     FROM customer GROUP BY nk, c_mktsegment
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -935,7 +925,7 @@ _LATTICE_SQL = """
 """
 
 
-@_q("q_moran_i")
+@query
 def q_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2+ Moran's I spatial autocorrelation of customer-point density
     over the 16×16 rook-adjacency lattice: are dense cells next to
@@ -985,7 +975,7 @@ def q_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_moran_i"] = f"""
+oracle("q_moran_i", f"""
     WITH {_LATTICE_SQL},
     tot AS (
         SELECT CAST(sum(c) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
@@ -1007,10 +997,10 @@ ORACLE_R7["q_moran_i"] = f"""
            (CAST(n_cells AS DOUBLE) / CAST(w_pairs AS DOUBLE))
              * ({_limb_sql('num')}) / ({_limb_sql('den')}) AS moran_i
     FROM nn, num, den
-"""
+""")
 
 
-@_q("q_geary_c")
+@query
 def q_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2+ Geary's C — the local-contrast twin of q_moran_i over the
     same 16×16 rook lattice: C = ((n−1)/(2W))·Σw(z_i−z_j)²/Σz², sensitive
@@ -1060,7 +1050,7 @@ def q_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_geary_c"] = f"""
+oracle("q_geary_c", f"""
     WITH {_LATTICE_SQL},
     tot AS (
         SELECT CAST(sum(c) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
@@ -1083,7 +1073,7 @@ ORACLE_R7["q_geary_c"] = f"""
            (CAST(n_cells - 1 AS DOUBLE) / (2.0 * CAST(w_pairs AS DOUBLE)))
              * ({_limb_sql('num')}) / ({_limb_sql('den')}) AS geary_c
     FROM nn, num, den
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1091,7 +1081,7 @@ ORACLE_R7["q_geary_c"] = f"""
 # ---------------------------------------------------------------------------
 
 
-@_q("q_rich_club")
+@query
 def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ rich-club profile of the co-purchase graph: for each degree
     floor k, the density φ(k) = 2·E_k / (N_k(N_k−1)) among nodes of
@@ -1149,7 +1139,7 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_rich_club"] = """
+oracle("q_rich_club", """
     WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     pairs AS (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -1184,10 +1174,10 @@ ORACLE_R7["q_rich_club"] = """
     FROM ks LEFT JOIN nodes_k ON nodes_k.k = ks.k
             LEFT JOIN edges_k ON edges_k.k = ks.k
     ORDER BY ks.k
-"""
+""")
 
 
-@_q("q_ra_link_prediction")
+@query
 def q_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ link prediction over the co-purchase graph: for every
     NON-adjacent node pair sharing ≥1 neighbor, the common-neighbor
@@ -1236,7 +1226,7 @@ def q_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_ra_link_prediction"] = """
+oracle("q_ra_link_prediction", """
     WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     pairs AS (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -1267,10 +1257,10 @@ ORACLE_R7["q_ra_link_prediction"] = """
     FROM non_edges
     ORDER BY ra_q DESC, cn DESC, pa, pb
     LIMIT 50
-"""
+""")
 
 
-@_q("q_dunn_index")
+@query
 def q_dunn_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.6+ Dunn validity index of the nation "clustering" of customer
     balances (1-D, exact cents): min inter-cluster separation over max
@@ -1322,7 +1312,7 @@ def q_dunn_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_dunn_index"] = """
+oracle("q_dunn_index", """
     WITH c AS (
         SELECT CAST(c_nationkey AS BIGINT) AS nk,
                CAST(floor(c_acctbal * 100) AS BIGINT) AS v
@@ -1343,7 +1333,7 @@ ORACLE_R7["q_dunn_index"] = """
     SELECT min_inter, max_diam,
            CAST(min_inter AS DOUBLE) / CAST(max_diam AS DOUBLE) AS dunn
     FROM diam, gaps
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1352,7 +1342,7 @@ ORACLE_R7["q_dunn_index"] = """
 # ---------------------------------------------------------------------------
 
 
-@_q("q_katz_bounded")
+@query
 def q_katz_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ hop-bounded Katz centrality on the co-purchase graph:
     64·Σ_{k≤3} β^k·walks_k(v) with β = 1/4 — i.e. the exact integer
@@ -1405,7 +1395,7 @@ def q_katz_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_katz_bounded"] = """
+oracle("q_katz_bounded", """
     WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     pairs AS (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -1434,10 +1424,10 @@ ORACLE_R7["q_katz_bounded"] = """
              LEFT JOIN w3 ON w3.node = deg.node
     ORDER BY katz_q DESC, deg.node
     LIMIT 20
-"""
+""")
 
 
-@_q("q_mk_seasonal")
+@query
 def q_mk_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ seasonal Mann–Kendall: the trend statistic S computed
     WITHIN each ISO weekday and summed — the deseasonalized upgrade of
@@ -1472,7 +1462,7 @@ def q_mk_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_mk_seasonal"] = """
+oracle("q_mk_seasonal", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS cents
@@ -1488,10 +1478,10 @@ ORACLE_R7["q_mk_seasonal"] = """
            CAST(count(*) AS BIGINT) AS n_pairs
     FROM d a JOIN d b ON a.dow = b.dow AND a.day < b.day
     GROUP BY a.dow ORDER BY a.dow
-"""
+""")
 
 
-@_q("q_bowker")
+@query
 def q_bowker(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Bowker symmetry test cells over the priority × price-
     quintile square table (the McNemar generalization): for each i<j,
@@ -1534,7 +1524,7 @@ def q_bowker(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("i", "j")
 
 
-ORACLE_R7["q_bowker"] = f"""
+oracle("q_bowker", f"""
     WITH o AS (
         SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS r1,
                CAST(ntile(5) OVER (ORDER BY
@@ -1564,10 +1554,10 @@ ORACLE_R7["q_bowker"] = f"""
                 THEN ({_limb_sql('d2')}) / CAST(s AS DOUBLE)
            END AS contrib
     FROM w ORDER BY i, j
-"""
+""")
 
 
-@_q("q_lorenz_deciles")
+@query
 def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.5+ Lorenz curve of customer revenue concentration in exact
     deciles: decile cut over per-customer totals (custkey tie-break),
@@ -1622,7 +1612,7 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("decile")
 
 
-ORACLE_R7["q_lorenz_deciles"] = """
+oracle("q_lorenz_deciles", """
     WITH per_cust AS (
         SELECT o_custkey,
                CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -1643,10 +1633,10 @@ ORACLE_R7["q_lorenz_deciles"] = """
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
              / CAST(sum(cents) OVER () AS DOUBLE) AS cum_share
     FROM per_dec ORDER BY decile
-"""
+""")
 
 
-@_q("q_ljung_box")
+@query
 def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Ljung–Box-style portmanteau over the calendar-paired ACF:
     Q = n(n+2)·Σ_{k=1..7} r_k²/m_k with the q_autocorr lags (m_k =
@@ -1694,7 +1684,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("q_xyz_parts")
+@query
 def q_xyz_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.5+ XYZ demand-variability classification — the companion axis
     to q_abc_parts' value ranking: per part, monthly demand quantities
@@ -1738,7 +1728,7 @@ def q_xyz_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_xyz_parts"] = """
+oracle("q_xyz_parts", """
     WITH pm AS (
         SELECT l_partkey, strftime(l_shipdate, '%Y-%m') AS mon,
                CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS q
@@ -1761,7 +1751,7 @@ ORACLE_R7["q_xyz_parts"] = """
     )
     SELECT xyz_class, CAST(count(*) AS BIGINT) AS n_parts
     FROM classed GROUP BY xyz_class ORDER BY xyz_class
-"""
+""")
 
 
 def _ljung_oracle() -> str:
@@ -1819,10 +1809,10 @@ def _ljung_oracle() -> str:
 """
 
 
-ORACLE_R7["q_ljung_box"] = _ljung_oracle()
+oracle("q_ljung_box", _ljung_oracle())
 
 
-@_q("q_footrule")
+@query
 def q_footrule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Spearman footrule distance between the part revenue
     rankings of the two calendar eras (ship years ≤1997 vs ≥1998):
@@ -1877,7 +1867,7 @@ def q_footrule(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_footrule"] = """
+oracle("q_footrule", """
     WITH li AS (
         SELECT l_partkey,
                CAST(floor(l_extendedprice * 100) AS BIGINT) AS c,
@@ -1905,10 +1895,10 @@ ORACLE_R7["q_footrule"] = """
              / (CAST(count(*) AS DOUBLE) * CAST(count(*) AS DOUBLE))
              AS norm_footrule
     FROM j
-"""
+""")
 
 
-@_q("q_holiday_lift")
+@query
 def q_holiday_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ holiday revenue lift: average daily revenue on the fixed
     (month, day) holiday set {Jan 1, Jul 4, Dec 25} vs all other days,
@@ -1949,7 +1939,7 @@ def q_holiday_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_holiday_lift"] = """
+oracle("q_holiday_lift", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS cents
@@ -1975,10 +1965,10 @@ ORACLE_R7["q_holiday_lift"] = """
              / (CAST(other_cents AS DOUBLE) / CAST(other_days AS DOUBLE))
              AS lift
     FROM agg
-"""
+""")
 
 
-@_q("q_cold_start_rate")
+@query
 def q_cold_start_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.5+ monthly cold-start share: what fraction of each month's
     orders come from customers placing their FIRST-ever order that
@@ -2011,7 +2001,7 @@ def q_cold_start_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_cold_start_rate"] = """
+oracle("q_cold_start_rate", """
     WITH o AS (
         SELECT o_custkey, strftime(o_orderdate, '%Y-%m') AS mon FROM orders
     ), first AS (
@@ -2025,10 +2015,10 @@ ORACLE_R7["q_cold_start_rate"] = """
              AS DOUBLE) / CAST(count(*) AS DOUBLE) AS new_rate
     FROM o JOIN first USING (o_custkey)
     GROUP BY o.mon ORDER BY o.mon
-"""
+""")
 
 
-@_q("q_ship_delay_bands")
+@query
 def q_ship_delay_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.3+ fulfillment-delay histogram: days between order and ship
     dates, banded into weeks (delay div 7 — truncating division both
@@ -2051,16 +2041,16 @@ def q_ship_delay_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_ship_delay_bands"] = """
+oracle("q_ship_delay_bands", """
     SELECT CAST(date_diff('day', o_orderdate, l_shipdate) // 7 AS BIGINT)
              AS week_band,
            CAST(count(*) AS BIGINT) AS n_items
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY week_band ORDER BY week_band
-"""
+""")
 
 
-@_q("q_sign_test")
+@query
 def q_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ paired sign test: per ISO week, is the weekend's AVERAGE
     daily revenue above the weekdays' (the simplest paired location
@@ -2106,7 +2096,7 @@ def q_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_sign_test"] = """
+oracle("q_sign_test", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS cents
@@ -2145,10 +2135,10 @@ ORACLE_R7["q_sign_test"] = """
     SELECT n_weeks, n_plus, n_minus, n_ties,
            CAST(greatest(n_plus, n_minus) AS BIGINT) AS k_tail
     FROM agg
-"""
+""")
 
 
-@_q("q_yule_q")
+@query
 def q_yule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Yule's Q association on the raw URGENT × returned 2×2
     table: Q = (ad−bc)/(ad+bc) — the [-1,1]-normalized odds ratio,
@@ -2184,7 +2174,7 @@ def q_yule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R7["q_yule_q"] = f"""
+oracle("q_yule_q", f"""
     WITH j AS (
         SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS urg,
                CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS ret
@@ -2205,4 +2195,4 @@ ORACLE_R7["q_yule_q"] = f"""
            (({_limb_sql('ad')}) - ({_limb_sql('bc')}))
              / (({_limb_sql('ad')}) + ({_limb_sql('bc')})) AS yule_q
     FROM w
-"""
+""")

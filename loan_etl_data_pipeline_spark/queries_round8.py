@@ -16,18 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loan_etl_data_pipeline_spark.catalog import oracle, query
 from loan_etl_data_pipeline_spark.sources.tables import load_table
-
-QUERIES_R8: dict = {}
-ORACLE_R8: dict[str, str] = {}
-
-
-def _q(name):
-    def reg(fn):
-        QUERIES_R8[name] = fn
-        return fn
-
-    return reg
 
 
 def _limb_sql(c: str) -> str:
@@ -65,7 +55,7 @@ _COPURCHASE_SQL = """
 """
 
 
-@_q("q_hyperball_replay")
+@query
 def q_hyperball_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ HyperBall register-state replay (VERDICT r7 ask #5): the
     EXACT integer register table behind q_hyperball_nf's HLL estimate
@@ -116,7 +106,7 @@ def q_hyperball_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_hyperball_replay"] = f"""
+oracle("q_hyperball_replay", f"""
     WITH {_COPURCHASE_SQL},
     nodes AS (SELECT DISTINCT u AS id FROM adj),
     b0 AS (SELECT id AS node, id AS member FROM nodes),
@@ -151,7 +141,7 @@ ORACLE_R8["q_hyperball_replay"] = f"""
     SELECT CAST(hop AS BIGINT) AS hops, n_regs,
            {_limb_sql('u')} AS harmonic_units
     FROM agg ORDER BY hops
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -203,7 +193,7 @@ def _square_margins(spark: SparkSession, sf_dir: str):
     return cells, marg
 
 
-@_q("q_scott_pi")
+@query
 def q_scott_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Scott's π between order priority and price quintile — the
     chance-corrected agreement with a SHARED marginal model (π_q =
@@ -245,7 +235,7 @@ def q_scott_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_scott_pi"] = f"""
+oracle("q_scott_pi", f"""
     WITH {_QUINTILE_SQL},
     agg AS (
         SELECT CAST(sum(n) AS BIGINT) AS n,
@@ -268,10 +258,10 @@ ORACLE_R8["q_scott_pi"] = f"""
            / (4.0 * CAST(agg.n AS DOUBLE) * CAST(agg.n AS DOUBLE)
               - ({_limb_sql('s2.s2')})) AS scott_pi
     FROM agg, s2
-"""
+""")
 
 
-@_q("q_gwet_ac1")
+@query
 def q_gwet_ac1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Gwet's AC1 between order priority and price quintile — the
     paradox-resistant agreement coefficient (κ and π collapse when one
@@ -320,7 +310,7 @@ def q_gwet_ac1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_gwet_ac1"] = f"""
+oracle("q_gwet_ac1", f"""
     WITH {_QUINTILE_SQL},
     agg AS (
         SELECT CAST(sum(n) AS BIGINT) AS n,
@@ -345,10 +335,10 @@ ORACLE_R8["q_gwet_ac1"] = f"""
            / (16.0 * CAST(agg.n AS DOUBLE) * CAST(agg.n AS DOUBLE)
               - ({_limb_sql('pe.pe')})) AS gwet_ac1
     FROM agg, pe
-"""
+""")
 
 
-@_q("q_gk_lambda")
+@query
 def q_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Goodman–Kruskal λ (price quintile → priority): the
     proportional-reduction-in-error of guessing an order's priority
@@ -383,7 +373,7 @@ def q_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_gk_lambda"] = f"""
+oracle("q_gk_lambda", f"""
     WITH {_QUINTILE_SQL},
     per_x AS (
         SELECT r2, max(n) AS mx FROM cells GROUP BY r2
@@ -400,7 +390,7 @@ ORACLE_R8["q_gk_lambda"] = f"""
                      / CAST(nn.n - cm.max_marg AS DOUBLE)
            END AS gk_lambda
     FROM nn, best, cm
-"""
+""")
 
 
 # the q_gk_gamma contingency (priority × integer quantity), shared by
@@ -466,7 +456,7 @@ def _concordance(cells: DataFrame):
     )
 
 
-@_q("q_somers_d")
+@query
 def q_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Somers' D_Y|X of line-item quantity (Y) on order priority
     (X): the tie-aware asymmetric upgrade of q_gk_gamma — γ throws
@@ -510,7 +500,7 @@ def q_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-ORACLE_R8["q_somers_d"] = f"""
+oracle("q_somers_d", f"""
     WITH {_QTY_CELLS_SQL},
     cd AS (
         SELECT sum(CASE WHEN (b.x > a.x) = (b.y > a.y) AND b.y <> a.y
@@ -535,10 +525,10 @@ ORACLE_R8["q_somers_d"] = f"""
               + ({_limb_sql('ty.typairs')}) - ({_limb_sql('tb.tb')}))
              AS somers_d
     FROM cd, ty, tb
-"""
+""")
 
 
-@_q("q_stuart_tau_c")
+@query
 def q_stuart_tau_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Stuart's τ_c between order priority and line-item quantity:
     the rectangular-table rank correlation — γ ignores ties and τ_b
@@ -572,7 +562,7 @@ def q_stuart_tau_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_stuart_tau_c"] = f"""
+oracle("q_stuart_tau_c", f"""
     WITH {_QTY_CELLS_SQL},
     cd AS (
         SELECT sum(CASE WHEN (b.x > a.x) = (b.y > a.y) AND b.y <> a.y
@@ -596,7 +586,7 @@ ORACLE_R8["q_stuart_tau_c"] = f"""
                 * CAST(m.m - 1 AS DOUBLE))
            END AS tau_c
     FROM cd, m
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -604,7 +594,7 @@ ORACLE_R8["q_stuart_tau_c"] = f"""
 # ---------------------------------------------------------------------------
 
 
-@_q("q_cox_stuart")
+@query
 def q_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Cox–Stuart trend test on daily revenue: pair day i with
     day i + (n − n div 2) (the middle day drops out when n is odd) and
@@ -646,7 +636,7 @@ def q_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_cox_stuart"] = """
+oracle("q_cox_stuart", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -668,10 +658,10 @@ ORACLE_R8["q_cox_stuart"] = """
            CAST(sum(CASE WHEN cb < ca THEN 1 ELSE 0 END) AS BIGINT) AS n_minus,
            CAST(sum(CASE WHEN cb = ca THEN 1 ELSE 0 END) AS BIGINT) AS n_ties
     FROM pairs
-"""
+""")
 
 
-@_q("q_records_test")
+@query
 def q_records_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ records test on daily revenue: the count of upper records
     (days strictly above every earlier day) and lower records — under
@@ -718,7 +708,7 @@ def q_records_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_records_test"] = """
+oracle("q_records_test", """
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -740,7 +730,7 @@ ORACLE_R8["q_records_test"] = """
            CAST(sum(CASE WHEN prev_min IS NULL OR cents < prev_min
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_lower
     FROM flags
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -748,7 +738,7 @@ ORACLE_R8["q_records_test"] = """
 # ---------------------------------------------------------------------------
 
 
-@_q("q_avg_clustering")
+@query
 def q_avg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ average local clustering coefficient of the co-purchase
     graph (Watts–Strogatz): mean over deg≥2 nodes of 2·tri(v) /
@@ -799,7 +789,7 @@ def q_avg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_avg_clustering"] = f"""
+oracle("q_avg_clustering", f"""
     WITH {_COPURCHASE_SQL},
     tri AS (
         SELECT e1.pa AS x, e1.pb AS y, e2.pb AS z
@@ -827,7 +817,7 @@ ORACLE_R8["q_avg_clustering"] = f"""
            ({_limb_sql('s')}) / 1.0e9 / CAST(n_nodes AS DOUBLE)
              AS avg_clustering
     FROM agg
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -835,7 +825,7 @@ ORACLE_R8["q_avg_clustering"] = f"""
 # ---------------------------------------------------------------------------
 
 
-@_q("q_abc_xyz_matrix")
+@query
 def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.5+ ABC×XYZ cross-classification — the 3×3 inventory policy
     matrix joining q_abc_parts' value axis (cumulative revenue share:
@@ -898,7 +888,7 @@ def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_abc_xyz_matrix"] = """
+oracle("q_abc_xyz_matrix", """
     WITH per_part AS (
         SELECT l_partkey,
                sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS cents
@@ -939,10 +929,10 @@ ORACLE_R8["q_abc_xyz_matrix"] = """
     FROM abc JOIN xyz USING (l_partkey)
     GROUP BY abc.abc, xyz.xyz
     ORDER BY abc, xyz
-"""
+""")
 
 
-@_q("q_bowley_skew")
+@query
 def q_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Bowley (quartile) skewness of line-item quantity per
     return flag: (Q1 + Q3 − 2·Q2)/(Q3 − Q1) on type-1 (ceil-position)
@@ -998,7 +988,7 @@ def q_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-ORACLE_R8["q_bowley_skew"] = """
+oracle("q_bowley_skew", """
     WITH li AS (
         SELECT l_returnflag AS f, CAST(floor(l_quantity) AS BIGINT) AS v
         FROM lineitem
@@ -1025,10 +1015,10 @@ ORACLE_R8["q_bowley_skew"] = """
                      / CAST(q3 - q1 AS DOUBLE)
            END AS bowley_skew
     FROM qs ORDER BY l_returnflag
-"""
+""")
 
 
-@_q("q_source_dup_overlap")
+@query
 def q_source_dup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1+ cross-source near-duplicate leakage matrix: for each source
     pair, how many head fingerprints (md5 of the first 40 chars — the
@@ -1054,7 +1044,7 @@ def q_source_dup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_source_dup_overlap"] = """
+oracle("q_source_dup_overlap", """
     WITH d AS (
         SELECT DISTINCT md5(substr(text, 1, 40)) AS fp, source
         FROM documents
@@ -1064,10 +1054,10 @@ ORACLE_R8["q_source_dup_overlap"] = """
     FROM d a JOIN d b ON a.fp = b.fp AND a.source < b.source
     GROUP BY src_a, src_b
     ORDER BY src_a, src_b
-"""
+""")
 
 
-@_q("q_kendall_tau_b")
+@query
 def q_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Kendall's τ_b between order priority and line-item
     quantity — the tie-corrected rank correlation completing the
@@ -1138,7 +1128,7 @@ def q_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_kendall_tau_b"] = f"""
+oracle("q_kendall_tau_b", f"""
     WITH {_QTY_CELLS_SQL},
     cd AS (
         SELECT sum(CASE WHEN (b.x > a.x) = (b.y > a.y) AND b.y <> a.y
@@ -1170,10 +1160,10 @@ ORACLE_R8["q_kendall_tau_b"] = f"""
                      + ({_limb_sql('ty.typ')}) - ({_limb_sql('tb.tboth')})))
              AS tau_b
     FROM cd, tb, tx, ty
-"""
+""")
 
 
-@_q("q_pearson_mode_skew")
+@query
 def q_pearson_mode_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Pearson's first (mode) skewness of line-item quantity per
     return flag: (mean − mode)/σ, algebraically lifted to the all-
@@ -1217,7 +1207,7 @@ def q_pearson_mode_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-ORACLE_R8["q_pearson_mode_skew"] = f"""
+oracle("q_pearson_mode_skew", f"""
     WITH li AS (
         SELECT l_returnflag AS f, CAST(floor(l_quantity) AS BIGINT) AS v
         FROM lineitem
@@ -1239,10 +1229,10 @@ ORACLE_R8["q_pearson_mode_skew"] = f"""
                   - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) AS mode_skew
     FROM mom JOIN mode ON mode.f = mom.f
     ORDER BY l_returnflag
-"""
+""")
 
 
-@_q("q_event_type_lift")
+@query
 def q_event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E6+ user-level association lift between event types:
     lift(A,B) = P(user does A and B) / (P(A)·P(B)) = n_AB·N /
@@ -1296,7 +1286,7 @@ def q_event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("ta", "tb")
 
 
-ORACLE_R8["q_event_type_lift"] = """
+oracle("q_event_type_lift", """
     WITH ev AS (
         SELECT DISTINCT user_id, event_type AS t FROM events
         WHERE event_type IS NOT NULL AND user_id IS NOT NULL
@@ -1316,10 +1306,10 @@ ORACLE_R8["q_event_type_lift"] = """
     JOIN per_t na ON na.t = pairs.ta
     JOIN per_t nb ON nb.t = pairs.tb
     ORDER BY ta, tb
-"""
+""")
 
 
-@_q("q_edge_jaccard")
+@query
 def q_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9+ structural edge similarity on the co-purchase graph: per
     edge, the neighbor-set Jaccard |N(u)∩N(v)| / |N(u)∪N(v)| — near 0
@@ -1367,7 +1357,7 @@ def q_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_edge_jaccard"] = f"""
+oracle("q_edge_jaccard", f"""
     WITH {_COPURCHASE_SQL},
     cn AS (
         SELECT a.u AS a, b.u AS b, CAST(count(*) AS BIGINT) AS cn
@@ -1386,10 +1376,10 @@ ORACLE_R8["q_edge_jaccard"] = f"""
     JOIN deg db ON db.node = p.pb
     ORDER BY jacc_q DESC, a, b
     LIMIT 20
-"""
+""")
 
 
-@_q("q_charclass_profile")
+@query
 def q_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4+ character-class profile per source: total/uppercase/digit/
     whitespace character counts and their ratios — the cheapest
@@ -1438,7 +1428,7 @@ def q_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-ORACLE_R8["q_charclass_profile"] = """
+oracle("q_charclass_profile", """
     WITH d AS (
         SELECT source,
                CAST(length(text) AS BIGINT) AS len,
@@ -1462,10 +1452,10 @@ ORACLE_R8["q_charclass_profile"] = """
            CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE) AS digit_ratio,
            CAST(n_space AS DOUBLE) / CAST(n_chars AS DOUBLE) AS space_ratio
     FROM agg ORDER BY source
-"""
+""")
 
 
-@_q("q_gini_mean_diff")
+@query
 def q_gini_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ Gini mean difference of line-item quantity per return
     flag: GMD = E|X−Y| over distinct pairs — the dispersion measure
@@ -1528,7 +1518,7 @@ def q_gini_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-ORACLE_R8["q_gini_mean_diff"] = f"""
+oracle("q_gini_mean_diff", f"""
     WITH li AS (
         SELECT l_returnflag AS f, CAST(floor(l_quantity) AS BIGINT) AS v
         FROM lineitem
@@ -1551,10 +1541,10 @@ ORACLE_R8["q_gini_mean_diff"] = f"""
              / (2.0 * CAST(s AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS gini
     FROM mom JOIN num ON num.f = mom.f
     ORDER BY l_returnflag
-"""
+""")
 
 
-@_q("q_orc_roundtrip")
+@query
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+ ORC interchange round-trip: orders with o_orderkey%5==0
     written as ORC via Spark's NATIVE columnar writer and read back,
@@ -1584,17 +1574,17 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_orc_roundtrip"] = """
+oracle("q_orc_roundtrip", """
     SELECT o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,
            CAST(SUM(CAST(FLOOR((o_totalprice) * 100) AS BIGINT)) AS DOUBLE)
              / 100 AS revenue
     FROM orders WHERE o_orderkey % 5 = 0
     GROUP BY o_orderstatus
-"""
+""")
 
 
-@_q("q_point_biserial")
+@query
 def q_point_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1+/A.4+ point-biserial correlation between near-duplicate
     membership and document length: does the dedup pipeline
@@ -1646,7 +1636,7 @@ def q_point_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_point_biserial"] = f"""
+oracle("q_point_biserial", f"""
     WITH d AS (
         SELECT md5(substr(text, 1, 40)) AS fp,
                CAST(n_chars AS BIGINT) AS x
@@ -1674,10 +1664,10 @@ ORACLE_R8["q_point_biserial"] = f"""
                          * (CAST(s1 AS DOUBLE) + CAST(s0 AS DOUBLE))))
            END AS r_pb
     FROM m
-"""
+""")
 
 
-@_q("q_phi_coefficient")
+@query
 def q_phi_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.4+ φ coefficient of the URGENT × returned 2×2 table —
     Pearson's r specialized to two binaries, the BOUNDED companion of
@@ -1728,7 +1718,7 @@ def q_phi_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_R8["q_phi_coefficient"] = f"""
+oracle("q_phi_coefficient", f"""
     WITH j AS (
         SELECT CASE WHEN o_orderpriority LIKE '1%' THEN 1 ELSE 0 END AS u,
                CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS r
@@ -1754,10 +1744,10 @@ ORACLE_R8["q_phi_coefficient"] = f"""
                     * CAST(a + c AS DOUBLE)) * CAST(b + d AS DOUBLE)))
              AS phi
     FROM w
-"""
+""")
 
 
-@_q("q_raking")
+@query
 def q_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A.9+ raking / iterative proportional fitting of the priority ×
     order-status table to UNIFORM target margins — the survey-
@@ -1862,4 +1852,4 @@ def _raking_oracle() -> str:
 """
 
 
-ORACLE_R8["q_raking"] = _raking_oracle()
+oracle("q_raking", _raking_oracle())

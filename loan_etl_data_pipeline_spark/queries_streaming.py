@@ -45,10 +45,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loan_etl_data_pipeline_spark.catalog import oracle, query
 from loan_etl_data_pipeline_spark.sources.tables import load_table
 
-QUERIES_STREAMING: dict = {}
-ORACLE_STREAMING: dict[str, str] = {}
 
 _ROOT_CLEANUP: set[str] = set()
 
@@ -150,6 +149,7 @@ def _event_stream(spark: SparkSession, src: str) -> DataFrame:
     )
 
 
+@query
 def q_scd2_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2+ stream-maintained SCD2 dimension == one-shot rebuild
     (streaming/ingest.py stream_scd2): three time-ordered micro-batches
@@ -192,11 +192,9 @@ def q_scd2_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_scd2_maintained"] = q_scd2_maintained
-
 # the one-shot rebuild over everything ingested — textually the
 # q_scd2_users oracle: maintained must equal rebuilt, cross-engine
-ORACLE_STREAMING["q_scd2_maintained"] = """
+oracle("q_scd2_maintained", """
     WITH ordered AS (
         SELECT user_id, event_type, ts, event_id,
                row_number() OVER w AS rn,
@@ -219,7 +217,7 @@ ORACLE_STREAMING["q_scd2_maintained"] = """
            CAST(version AS BIGINT) AS version,
            vt IS NULL AS is_current
     FROM v
-"""
+""")
 
 
 def _event_canonical():
@@ -237,6 +235,7 @@ def _event_canonical():
     )
 
 
+@query
 def q_fingerprint_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2+ stream-maintained table fingerprint == one-shot fingerprint
     (streaming/ingest.py streaming_fingerprint): each micro-batch's
@@ -272,9 +271,7 @@ def q_fingerprint_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_fingerprint_maintained"] = q_fingerprint_maintained
-
-ORACLE_STREAMING["q_fingerprint_maintained"] = """
+oracle("q_fingerprint_maintained", """
     WITH c AS (
         SELECT md5(concat_ws('|',
                    CAST(event_id AS VARCHAR),
@@ -290,9 +287,10 @@ ORACLE_STREAMING["q_fingerprint_maintained"] = """
              AS checksum
     FROM c
     GROUP BY bucket
-"""
+""")
 
 
+@query
 def q_reconcile_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2+ stream-maintained settlement reconciliation == one-shot
     batch run (streaming/ingest.py stream_reconcile): purchase-vs-view
@@ -375,11 +373,9 @@ def q_reconcile_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_reconcile_maintained"] = q_reconcile_maintained
-
 # the one-shot global batch rebuild — textually the q_reconcile oracle:
 # streamed (pending-backlog) matching must equal it exactly
-ORACLE_STREAMING["q_reconcile_maintained"] = """
+oracle("q_reconcile_maintained", """
     WITH ev AS (
         SELECT user_id, ts, event_id, event_type,
                CAST(FLOOR(value * 100) AS BIGINT) AS cents,
@@ -412,9 +408,10 @@ ORACLE_STREAMING["q_reconcile_maintained"] = """
            CAST(sum(CASE WHEN pa AND pb
                     THEN abs(ca - cb) ELSE 0 END) AS BIGINT) AS drift_c
     FROM j GROUP BY user_id
-"""
+""")
 
 
+@query
 def q_interval_join_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST4+ watermarked stream⋈stream interval join == batch range
     join (streaming/ingest.py stream_stream_interval_join): error
@@ -475,9 +472,7 @@ def q_interval_join_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_interval_join_streamed"] = q_interval_join_streamed
-
-ORACLE_STREAMING["q_interval_join_streamed"] = """
+oracle("q_interval_join_streamed", """
     WITH e AS (
         SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'
     ), c AS (
@@ -493,7 +488,7 @@ ORACLE_STREAMING["q_interval_join_streamed"] = """
     SELECT user_id, CAST(count(*) AS BIGINT) AS n_pairs,
            CAST(sum(lag_sec) AS BIGINT) AS lag_sec_sum
     FROM j GROUP BY user_id
-"""
+""")
 
 
 def _hh_item():
@@ -514,6 +509,7 @@ def _hh_item():
     )
 
 
+@query
 def q_heavy_hitters_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2+ streaming Misra–Gries heavy hitters + exact second pass ==
     plain SQL frequency filter (streaming/ingest.py
@@ -601,12 +597,10 @@ def q_heavy_hitters_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_heavy_hitters_maintained"] = q_heavy_hitters_maintained
-
 # the sketch-free derivation: every item whose exact count clears the
 # MG support threshold — by the recall guarantee, exactly what the
 # maintained candidates + exact second pass emit
-ORACLE_STREAMING["q_heavy_hitters_maintained"] = """
+oracle("q_heavy_hitters_maintained", """
     WITH it AS (
         SELECT CASE WHEN event_type = 'signup' THEN 'signup'
                     ELSE event_type || '#' || CAST(user_id % 50 AS VARCHAR)
@@ -621,9 +615,10 @@ ORACLE_STREAMING["q_heavy_hitters_maintained"] = """
     FROM nn, t
     GROUP BY nn.item, t.n_events
     HAVING 6 * count(*) > t.n_events
-"""
+""")
 
 
+@query
 def q_enrich_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2+ stream-static broadcast enrichment == one-shot batch join
     (streaming/ingest.py streaming_enrich): the three time-ordered
@@ -679,12 +674,10 @@ def q_enrich_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_enrich_maintained"] = q_enrich_maintained
-
 # one-shot batch derivation of the same enrich: LEFT join against the
 # restricted dimension, aggregated per (segment, event_type) — the
 # stream-static maintainer must match it exactly
-ORACLE_STREAMING["q_enrich_maintained"] = """
+oracle("q_enrich_maintained", """
     WITH dim AS (
         SELECT c_custkey AS user_id, c_mktsegment AS segment
         FROM customer WHERE c_custkey % 3 <> 0
@@ -697,9 +690,10 @@ ORACLE_STREAMING["q_enrich_maintained"] = """
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(sum(COALESCE(cents, 0)) AS BIGINT) AS cents
     FROM j GROUP BY segment, event_type
-"""
+""")
 
 
+@query
 def q_upsert_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2+ CDC streaming upsert WITH TOMBSTONES == one-shot argmax
     (streaming/ingest.py streaming_upsert → plans/upsert.py
@@ -764,11 +758,9 @@ def q_upsert_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_STREAMING["q_upsert_maintained"] = q_upsert_maintained
-
 # one-shot rebuild: per-user argmax over the full feed, tombstoned
 # keys dropped — the invariant merge∘merge∘bootstrap must preserve
-ORACLE_STREAMING["q_upsert_maintained"] = """
+oracle("q_upsert_maintained", """
     WITH ev AS (
         SELECT user_id,
                CAST(user_id % 8 AS BIGINT) AS shard,
@@ -788,4 +780,4 @@ ORACLE_STREAMING["q_upsert_maintained"] = """
     )
     SELECT CAST(user_id AS BIGINT) AS user_id, shard, event_type, cents, seq
     FROM latest WHERE op <> 'd'
-"""
+""")

@@ -33,11 +33,10 @@ schema, which has no partsupp/commitdate):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from loan_etl_data_pipeline_spark.catalog import oracle, query
 from loan_etl_data_pipeline_spark.functions.deterministic import dsum as _dsum
 from loan_etl_data_pipeline_spark.sources.tables import load_table
 
@@ -46,6 +45,7 @@ def _ts(day: str):
     return F.lit(day).cast("timestamp_ntz")
 
 
+@query
 def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 customers by revenue lost to returned items (TPC-H-Q10-style).
 
@@ -87,6 +87,7 @@ def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_priority_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS as a semi-join (TPC-H-Q4-style): orders per priority that
     had at least one returned line.
@@ -115,6 +116,7 @@ def q_priority_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Having-sum join-back (TPC-H-Q18-style): orders whose total quantity
     exceeds 300, with their customer.
@@ -152,6 +154,7 @@ def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_disjunctive_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disjunctive bracket predicates (TPC-H-Q19-style): revenue from
     three OR'd (brand × size × quantity) brackets.
@@ -183,6 +186,7 @@ def q_disjunctive_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-1 as a single-shuffle argmin (TPC-H-Q2-style,
     adapted: no partsupp table — "suppliers of a part" = suppliers seen
@@ -213,6 +217,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS + scalar subquery (TPC-H-Q22-style): per nation, the
     count and balance of above-average-balance customers who never
@@ -247,6 +252,7 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bilateral trade volume (TPC-H-Q7-style): yearly revenue shipped
     between NATION_1 and NATION_2, both directions.
@@ -290,6 +296,7 @@ def q_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-share ratio (TPC-H-Q8-style): NATION_5 suppliers' share
     of yearly revenue from ASIA-region customers.
@@ -345,6 +352,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-max join-back (TPC-H-Q15-style): the supplier(s) with the
     highest revenue in 1996-Q1.
@@ -381,6 +389,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_avg_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-average decorrelation with an integer compare
     (TPC-H-Q17-style): yearly-average revenue from Brand#5 lineitems
@@ -426,6 +435,7 @@ def q_avg_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_ship_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-class conditional counts after a fact-fact join
     (TPC-H-Q12-style; the testdata has no ``l_shipmode``, so the group
@@ -459,6 +469,7 @@ def q_ship_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_cust_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer distribution by order count, zero-order customers
     included (TPC-H-Q13-style): LEFT OUTER customer⋈orders with a
@@ -489,6 +500,7 @@ def q_cust_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers who shipped more than half of a red part's total 1996
     volume (TPC-H-Q20-style threshold semi-join; adapted — the testdata
@@ -537,8 +549,7 @@ def q_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("s_suppkey")
 
 
-ORACLE_TPCH: dict[str, str] = {
-    "q_ship_mode_counts": """
+oracle("q_ship_mode_counts", """
         SELECT l_linestatus,
                CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                              THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -549,8 +560,9 @@ ORACLE_TPCH: dict[str, str] = {
           AND l_shipdate <  TIMESTAMP '1997-01-01'
         GROUP BY l_linestatus
         ORDER BY l_linestatus
-    """,
-    "q_cust_order_distribution": """
+    """)
+
+oracle("q_cust_order_distribution", """
         WITH per_cust AS (
             SELECT c_custkey, count(o_orderkey) AS c_count
             FROM customer
@@ -563,8 +575,9 @@ ORACLE_TPCH: dict[str, str] = {
         FROM per_cust
         GROUP BY c_count
         ORDER BY custdist DESC, c_count DESC
-    """,
-    "q_excess_shippers": """
+    """)
+
+oracle("q_excess_shippers", """
         WITH red AS (
             SELECT l_suppkey, l_partkey,
                    CAST(FLOOR(l_quantity) AS BIGINT) AS qi
@@ -587,8 +600,9 @@ ORACLE_TPCH: dict[str, str] = {
             WHERE 2 * supp_qty > total_qty
         )
         ORDER BY s_suppkey
-    """,
-    "q_returned_revenue": """
+    """)
+
+oracle("q_returned_revenue", """
         WITH per_cust AS (
             SELECT o_custkey,
                    SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 100)
@@ -607,8 +621,9 @@ ORACLE_TPCH: dict[str, str] = {
         JOIN nation ON c_nationkey = n_nationkey
         ORDER BY cents DESC, c_custkey ASC
         LIMIT 20
-    """,
-    "q_priority_semijoin": """
+    """)
+
+oracle("q_priority_semijoin", """
         SELECT o_orderpriority, count(*) AS n_orders
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -616,8 +631,9 @@ ORACLE_TPCH: dict[str, str] = {
           AND EXISTS (SELECT 1 FROM lineitem
                       WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         GROUP BY o_orderpriority
-    """,
-    "q_big_orders": """
+    """)
+
+oracle("q_big_orders", """
         WITH big AS (
             SELECT l_orderkey,
                    CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT)
@@ -631,8 +647,9 @@ ORACLE_TPCH: dict[str, str] = {
         FROM big
         JOIN orders ON big.l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
-    """,
-    "q_disjunctive_parts": """
+    """)
+
+oracle("q_disjunctive_parts", """
         SELECT count(*) AS n_items,
                CAST(SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 100)
                              AS BIGINT)) AS DOUBLE) / 100 AS revenue
@@ -644,8 +661,9 @@ ORACLE_TPCH: dict[str, str] = {
                   AND l_quantity BETWEEN 10 AND 20)
             OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
                   AND l_quantity BETWEEN 20 AND 30))
-    """,
-    "q_min_cost_supplier": """
+    """)
+
+oracle("q_min_cost_supplier", """
         WITH ranked AS (
             SELECT l_partkey, s_suppkey, s_name, s_acctbal,
                    row_number() OVER (PARTITION BY l_partkey
@@ -657,8 +675,9 @@ ORACLE_TPCH: dict[str, str] = {
         SELECT p_partkey, p_name, s_name, s_acctbal
         FROM ranked JOIN part ON l_partkey = p_partkey
         WHERE rn = 1
-    """,
-    "q_idle_customers": """
+    """)
+
+oracle("q_idle_customers", """
         WITH avg_row AS (
             SELECT CAST(SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
                      / CAST(count(*) AS DOUBLE) AS avg_cents
@@ -671,8 +690,9 @@ ORACLE_TPCH: dict[str, str] = {
         WHERE CAST(CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS DOUBLE) > avg_cents
           AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         GROUP BY c_nationkey
-    """,
-    "q_nation_volume": """
+    """)
+
+oracle("q_nation_volume", """
         SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
                strftime(l_shipdate, '%Y') AS l_year,
                CAST(SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 100)
@@ -687,8 +707,9 @@ ORACLE_TPCH: dict[str, str] = {
           AND cn.n_name IN ('NATION_1', 'NATION_2')
           AND sn.n_name <> cn.n_name
         GROUP BY 1, 2, 3
-    """,
-    "q_market_share": """
+    """)
+
+oracle("q_market_share", """
         WITH asia_cust AS (
             SELECT c_custkey FROM customer
             JOIN nation ON c_nationkey = n_nationkey
@@ -711,8 +732,9 @@ ORACLE_TPCH: dict[str, str] = {
                  / CAST(CAST(SUM(cents) AS BIGINT) AS DOUBLE) AS mkt_share,
                CAST(CAST(SUM(cents) AS BIGINT) AS DOUBLE) / 100 AS total_revenue
         FROM f GROUP BY o_year
-    """,
-    "q_top_supplier": """
+    """)
+
+oracle("q_top_supplier", """
         WITH per_supp AS (
             SELECT l_suppkey,
                    CAST(SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 100)
@@ -726,8 +748,9 @@ ORACLE_TPCH: dict[str, str] = {
         FROM per_supp, mx
         JOIN supplier ON l_suppkey = s_suppkey
         WHERE cents = max_cents
-    """,
-    "q_avg_yearly": """
+    """)
+
+oracle("q_avg_yearly", """
         WITH branded AS (
             SELECT l_partkey, CAST(FLOOR(l_quantity) AS BIGINT) AS qi,
                    l_extendedprice
@@ -743,21 +766,5 @@ ORACLE_TPCH: dict[str, str] = {
                  / 100 / 7.0 AS avg_yearly
         FROM branded JOIN stats ON l_partkey = sp_partkey
         WHERE 5 * qi * n < sum_qty
-    """,
-}
+    """)
 
-QUERIES_TPCH: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_returned_revenue": q_returned_revenue,
-    "q_priority_semijoin": q_priority_semijoin,
-    "q_big_orders": q_big_orders,
-    "q_disjunctive_parts": q_disjunctive_parts,
-    "q_min_cost_supplier": q_min_cost_supplier,
-    "q_idle_customers": q_idle_customers,
-    "q_nation_volume": q_nation_volume,
-    "q_market_share": q_market_share,
-    "q_top_supplier": q_top_supplier,
-    "q_avg_yearly": q_avg_yearly,
-    "q_ship_mode_counts": q_ship_mode_counts,
-    "q_cust_order_distribution": q_cust_order_distribution,
-    "q_excess_shippers": q_excess_shippers,
-}

@@ -241,6 +241,7 @@ def test_read_csv_corrupt_record_quarantine(spark, tmp_path):
 def test_jsonl_round_trip_and_quarantine(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from loan_etl_data_pipeline_spark.session import intermediates, pin
     from loan_etl_data_pipeline_spark.sources.jsonl import read_jsonl, write_jsonl
 
     df = spark.createDataFrame([(1, "alpha"), (2, "beta")], "id long, text string")
@@ -257,13 +258,16 @@ def test_jsonl_round_trip_and_quarantine(spark, tmp_path):
     bad = tmp_path / "bad.jsonl"
     bad.write_text('{"id": 1, "text": "ok"}\n{not json at all\n')
     schema = StructType([StructField("id", LongType()), StructField("text", StringType())])
-    # cache first: Spark disallows queries touching ONLY the corrupt
+    # pin first: Spark disallows queries touching ONLY the corrupt
     # column on raw JSON/CSV (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-    got = read_jsonl(spark, str(bad), schema=schema, corrupt_col="_bad").cache()
-    assert got.filter("_bad IS NULL").count() == 1
-    assert [r["_bad"] for r in got.filter("_bad IS NOT NULL").collect()] == [
-        "{not json at all"
-    ]
+    spark.catalog.clearCache()
+    with intermediates():
+        got = pin(read_jsonl(spark, str(bad), schema=schema, corrupt_col="_bad"))
+        assert got.filter("_bad IS NULL").count() == 1
+        assert [r["_bad"] for r in got.filter("_bad IS NOT NULL").collect()] == [
+            "{not json at all"
+        ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     with pytest.raises(ValueError, match="corrupt_col requires"):
         read_jsonl(spark, str(bad), corrupt_col="_bad")
 
