@@ -2492,7 +2492,7 @@ def q_file_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     outs = []
     for t in ("lineitem", "orders", "documents"):
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+        df = load_table(spark, sf_dir, t)
         outs.append(
             df.select(
                 F.lit(t).alias("table_name"),

@@ -33,6 +33,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from loan_etl_data_pipeline_spark.sources.tables import _read_parquet
+
 
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
@@ -155,7 +157,9 @@ def read_version(
         raise ValueError(
             f"version {version} not committed under {table_dir!r}; have {versions}"
         )
-    return spark.read.parquet(f"{table_dir}/v{version:08d}")
+    # a snapshot is one flat Spark-written directory: open it from one
+    # footer, with no schema-inference job
+    return _read_parquet(spark, f"{table_dir}/v{version:08d}")
 
 
 def prune_versions(
