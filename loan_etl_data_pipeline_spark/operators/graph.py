@@ -1,22 +1,29 @@
-"""Iterative graph algorithms on DataFrames: connected components.
+"""Iterative graph operators on DataFrames, on one private loop core.
 
-Near-dup pairs (MinHash/SimHash/Jaccard — operators/dedup.py) are
-*edges*; what a dedup pipeline actually needs is the *cluster*: keep
-one document per connected component. Spark has no built-in CC (that
-lives in GraphFrames/GraphX), so this is the DataFrame-native
-min-label-propagation form:
+Every operator here is a relational loop: each round is a few joins and
+partial-aggregated groupBys keyed on node id, and the lineage is cut
+per round with ``localCheckpoint`` (without the cut the plan grows every
+round and the driver dies planning long before the data hurts). Spark
+has no built-in graph library (that lives in GraphFrames/GraphX), so
+the operators share these private building blocks instead:
 
-    label(v) ← min(label(v), min over neighbors' labels), repeat
+- edge forms: ``_undirected`` (both directions, distinct ``(u, v)``)
+  and ``_canonical`` (``a < b``, no self-loops, distinct ``(a, b)``);
+  neither cuts lineage, each caller cuts where its plan needs it;
+- ``_fixpoint``, the convergence driver of the run-to-fixed-point
+  loops (``connected_components``, ``connected_components_two_phase``,
+  ``kcore_converged``): probe, step and cut, compare the probe with the
+  last one, raise after ``max_iter`` rounds;
+- ``_peel``, one k-core peeling round (``kcore``, ``kcore_converged``);
+- ``_hop``, one level of frontier expansion (``bfs_hops``,
+  ``neighborhood_function`` and the resumable BFS query);
+- ``_pagerank``, the int64 PageRank rounds: ``pagerank`` is
+  ``personalized_pagerank`` with every node a teleport target.
 
-Each iteration is one join + one partial-aggregated groupBy (both keyed
-on node id), and the lineage is truncated per iteration with
-``localCheckpoint`` — without that, the plan doubles every round and
-the driver dies planning iteration ~15 long before the data hurts.
-Convergence is detected by the sum of labels (labels only ever
-decrease, so the sum is a strictly decreasing integer until the fixed
-point) — one cheap action per iteration, no self-join diff.
+Fixed-round loops stay plain ``for`` loops: their round count is the
+contract that lets an unrolled SQL CTE replay them.
 
-All per-round checkpoints are LAZY (``eager=False``, opt r8): an eager
+All per-round checkpoints are LAZY (``eager=False``): an eager
 ``localCheckpoint`` runs an extra count() job whose only purpose is to
 materialize — a full pass over the round's state per round.  Lazy
 marking gets the identical lineage cut (the returned frame is a
@@ -26,25 +33,84 @@ the caller's one action for fixed-round loops — compute-and-persist
 the partitions instead (Spark checkpoints marked RDDs after the first
 job that touches them, computing any missing partitions).  Per round
 that deletes one job + one full state scan; on a 100 TB graph the
-deleted scan is the node-sized state table, per round.  The two
-``eager=True`` finals (pagerank / personalized_pagerank) stay eager on
-purpose: their loop-invariant caches are unpersisted immediately after,
-so the result must be materialized first.
-
-Rounds needed = graph diameter. Near-dup clusters are small and dense
-(diameter 2-3 on real corpora), so this converges in a handful of
-rounds; for planet-scale general graphs you would switch to the
-large-star/small-star variant (Kiveris et al., "Connected Components
-in MapReduce and Beyond"), which is the same DataFrame shape with two
-alternating relabel rules.
+deleted scan is the node-sized state table, per round.  The one
+``eager=True`` final (``_pagerank``) stays eager on purpose: its
+loop-invariant caches are unpersisted immediately after, so the result
+must be materialized first.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable, Hashable
+
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.storagelevel import StorageLevel
 import pyspark.sql.functions as F
 
 from loan_etl_data_pipeline_spark.session import intermediates, pin
+
+# pagerank's rounds grow the plan additively (each round reads the last
+# once), so the lineage is cut only every this many rounds
+_PR_CHECKPOINT_INTERVAL = 5
+
+
+def _undirected(
+    edges: DataFrame, src: str, dst: str, *payload: Column
+) -> DataFrame:
+    """``(u, v, *payload)`` for every edge in both directions, distinct.
+    Not checkpointed."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), *payload)
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"), *payload))
+        .distinct()
+    )
+
+
+def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(a, b)`` with ``a < b`` for every edge, self-loops dropped,
+    distinct. Not checkpointed."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Callable[[DataFrame], Hashable],
+    max_iter: int,
+    what: str,
+) -> DataFrame:
+    """Apply ``step`` (each result lazily cut) until ``probe`` returns
+    the same value on two successive states; ``probe`` is the round's
+    one driver action and also materializes the cut. Raises after
+    ``max_iter`` rounds without a repeat."""
+    prev = probe(state)
+    for _ in range(max_iter):
+        state = step(state).localCheckpoint(eager=False)
+        cur = probe(state)
+        if cur == prev:
+            return state
+        prev = cur
+    raise RuntimeError(f"{what} did not converge in {max_iter} rounds")
+
+
+def _hop(frontier: DataFrame, e: DataFrame, visited: DataFrame, node: str) -> DataFrame:
+    """One level of BFS: the ``e`` neighbors of ``frontier``'s ``node``
+    column, keyed like ``frontier`` (its other columns carried), minus
+    the keys already in ``visited``."""
+    keys = frontier.columns
+    return (
+        frontier.join(e, frontier[node] == e["u"])
+        .select(*[c for c in keys if c != node], F.col("v").alias(node))
+        .distinct()
+        .join(visited.select(*keys), keys, "left_anti")
+    )
 
 
 def connected_components(
@@ -57,48 +123,44 @@ def connected_components(
     """(id, component) for every node in ``edges``; component = min node
     id reachable. Nodes absent from ``edges`` (singletons) are absent
     from the output — union them in as label=id if needed.
+
+    Near-dup pairs (operators/dedup.py) are edges; a dedup pipeline
+    needs the clusters. Min-label propagation,
+    ``label(v) ← min(label(v), min over neighbors' labels)``, costs one
+    join + one partial-aggregated groupBy per round. Convergence is
+    detected by the sum of labels (labels only ever decrease, so the
+    sum strictly decreases until the fixed point): one cheap action per
+    round, no self-join diff. Rounds needed = graph diameter, a handful
+    on near-dup clusters (diameter 2-3); long-chain graphs take
+    :func:`connected_components_two_phase`.
     """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     labels = (
-        e.select(F.col("a").alias("id"))
+        e.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
-            e.join(labels, e.b == labels.id)
-            .groupBy("a")
+            e.join(labels, e.v == labels.id)
+            .groupBy("u")
             .agg(F.min("label").alias("nbr_label"))
         )
-        labels = (
-            labels.join(nbr_min, labels.id == nbr_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(nbr_min, labels.id == nbr_min.u, "left").select(
+            "id",
+            F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
+                "label"
+            ),
         )
-        cur_sum = labels.agg(
+
+    def label_sum(labels: DataFrame):
+        return labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)"))
         ).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(diameter too large — use the large-star/small-star variant)"
-        )
+
+    labels = _fixpoint(labels, step, label_sum, max_iter, "connected_components")
     return labels.select("id", F.col("label").alias("component"))
 
 
@@ -187,19 +249,13 @@ def connected_components_two_phase(
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
         )
 
-    e = e0
-    prev = _edge_checksum(e)
-    for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint(eager=False)
-        cur = _edge_checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_two_phase did not converge in {max_iter} "
-            "alternation rounds"
-        )
+    e = _fixpoint(
+        e0,
+        lambda e: small_star(large_star(e)),
+        _edge_checksum,
+        max_iter,
+        "connected_components_two_phase",
+    )
     # stars: every edge (child, root); roots appear only on the b side
     return (
         nodes.join(e, nodes.id == e.a, "left")
@@ -311,14 +367,7 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     counting, so degree is the true undirected degree. Two shuffles
     (edge dedup, per-node count), both with map-side partials.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _canonical(edges, src, dst)
     return (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -341,17 +390,9 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     node keys only; the (deg, id) orientation order is a struct compare,
     entirely codegen.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # consumed twice (degree count + orientation join) and the
-        # upstream edge derivation may be expensive — truncate lineage
-        .localCheckpoint(eager=False)
-    )
+    # consumed twice (degree count + orientation join) and the upstream
+    # edge derivation may be expensive — truncate lineage
+    und = _canonical(edges, src, dst).localCheckpoint(eager=False)
     deg = degrees(und, "a", "b")
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("deg_b"))
@@ -383,6 +424,70 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     )
 
 
+def _pagerank(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    teleport: Callable[[DataFrame], tuple[DataFrame, Column, int]],
+    iterations: int,
+    scale: int,
+    damping_num: int,
+    damping_den: int,
+) -> DataFrame:
+    """The int64 PageRank rounds of :func:`pagerank` and
+    :func:`personalized_pagerank`. ``teleport(nodes)`` returns
+    ``(targets, seed, n)``: the node frame the rounds join against, a
+    column of it that is 1 on the ``n`` teleport targets and 0
+    elsewhere, and ``n``. It runs inside this function's
+    ``intermediates()`` scope, so it may ``pin``. With ``n == 0`` the
+    result is empty.
+
+    The loop-invariant frames (edges, out-degrees, node set) are pinned
+    once, not re-derived per round. The pr chain is linear (each round
+    reads the previous exactly once), so lineage grows additively and
+    is cut only every ``_PR_CHECKPOINT_INTERVAL`` rounds, to keep the
+    planner's input bounded on deep runs. The final pr (one row per
+    node) is checkpointed eagerly so the scope can release the caches
+    before returning: callers carry no release obligation.
+    """
+    mad = StorageLevel.MEMORY_AND_DISK
+    with intermediates():
+        e = pin(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
+            mad,
+        )
+        outdeg = pin(e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg")), mad)
+        nodes = pin(
+            e.select(F.col("u").alias("id"))
+            .union(e.select(F.col("v").alias("id")))
+            .distinct(),
+            mad,
+        )
+        targets, seed, n = teleport(nodes)
+        if n == 0:
+            return nodes.select("id", F.lit(0).cast("long").alias("pr"))
+        base = ((damping_den - damping_num) * scale) // damping_den
+        pr = targets.select("id", (seed * F.lit(scale // n)).cast("long").alias("pr"))
+        for i in range(iterations):
+            inbound = (
+                e.join(outdeg, "u")
+                .join(pr.withColumnRenamed("id", "u"), "u")
+                .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("s"))
+            )
+            pr = targets.join(inbound, "id", "left").select(
+                "id",
+                (
+                    seed.cast("long") * F.lit(base)
+                    + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
+                ).alias("pr"),
+            )
+            if (i + 1) % _PR_CHECKPOINT_INTERVAL == 0 and (i + 1) < iterations:
+                pr = pr.localCheckpoint(eager=False)
+        return pr.localCheckpoint(eager=True)
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -392,7 +497,6 @@ def pagerank(
     scale: int = 10**9,
     damping_num: int = 85,
     damping_den: int = 100,
-    checkpoint_interval: int = 5,
 ) -> DataFrame:
     """(id, pr) after ``iterations`` rounds of integer fixed-point
     PageRank over the DIRECTED edge set (symmetrize first for an
@@ -412,75 +516,32 @@ def pagerank(
     dangling nodes, which keep receiving but stop contributing) is
     deliberately NOT redistributed — redistribution needs a global
     float sum per round, exactly the non-determinism being excluded.
+    It is :func:`personalized_pagerank` with every node a teleport
+    target (one shared rounds body, ``_pagerank``); an empty edge set
+    gives an empty result.
 
     Scale: each round is one join keyed on the edge source + one
     partial-aggregated groupBy on the destination — the same two
-    Exchanges regardless of graph size. The loop-invariant frames
-    (edges, out-degrees, node set) are persist()ed once, not
-    re-derived per round, and — unlike connected components, whose
-    per-round *convergence action* forces a materialization anyway —
-    the pr chain here is linear (each round references the previous
-    exactly once), so lineage grows additively, not exponentially.
-    ``localCheckpoint`` therefore only fires every
-    ``checkpoint_interval`` rounds, purely to keep the planner's input
-    bounded on deep runs. The FINAL pr is eagerly localCheckpoint-ed
-    (one row per node — small) so the loop-invariant caches can be
-    unpersisted before returning: callers carry no release obligation
-    and long-lived sessions don't accumulate storage blocks.
-    Overflow bound: num · Σ contrib ≤
-    num · N · scale must stay under 2^63 (N ≤ ~10^8 at the defaults;
+    Exchanges regardless of graph size. Overflow bound: num · Σ contrib
+    ≤ num · N · scale must stay under 2^63 (N ≤ ~10^8 at the defaults;
     lower ``scale`` for bigger graphs).
     """
-    from pyspark.storagelevel import StorageLevel
+    return _pagerank(
+        edges, src, dst, lambda nodes: (nodes, F.lit(1), nodes.count()),
+        iterations, scale, damping_num, damping_den,
+    )
 
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
-    with intermediates():
-        mad = StorageLevel.MEMORY_AND_DISK
-        e = pin(
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
-            mad,
-        )
-        outdeg = pin(e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg")), mad)
-        nodes = pin(
-            e.select(F.col("u").alias("id"))
-            .union(e.select(F.col("v").alias("id")))
-            .distinct(),
-            mad,
-        )
-        n = nodes.count()
-        if n == 0:
-            # empty edge set (e.g. a support floor filtered everything):
-            # empty result, same schema — mirrors connected_components
-            return nodes.select("id", F.lit(0).cast("long").alias("pr"))
-        base = ((damping_den - damping_num) * scale) // damping_den
-        pr = nodes.select("id", F.lit(scale // n).cast("long").alias("pr"))
-        for i in range(iterations):
-            inbound = (
-                e.join(outdeg, "u")
-                .join(pr.withColumnRenamed("id", "u"), "u")
-                .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
-                .groupBy("id")
-                .agg(F.sum("c").alias("s"))
-            )
-            pr = nodes.join(inbound, "id", "left").select(
-                "id",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
-                ).alias("pr"),
-            )
-            if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-                pr = pr.localCheckpoint(eager=False)
-        # eager final checkpoint: pr is one small row per node post-agg,
-        # and materializing it here lets the scope release the three
-        # loop-invariant caches INSIDE the operator — callers
-        # (q_pagerank et al.) carry no release obligation, so long-lived
-        # sessions don't leak storage blocks until clearCache
-        pr = pr.localCheckpoint(eager=True)
-    return pr
+
+def _peel(e: DataFrame, k: int) -> DataFrame:
+    """One k-core round over symmetric ``(u, v)`` edges: drop every edge
+    touching a node of degree < k."""
+    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    low = deg.filter(F.col("d") < k).select("u")
+    return (
+        e.join(low, "u", "left_anti")
+        .join(low.withColumnRenamed("u", "v"), "v", "left_anti")
+        .select("u", "v")
+    )
 
 
 def kcore(
@@ -515,20 +576,9 @@ def kcore(
     """
     if k < 1 or rounds < 1:
         raise ValueError(f"k and rounds must be >= 1, got k={k} rounds={rounds}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
+    e = _undirected(edges, src, dst)
     for _ in range(rounds):
-        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        low = deg.filter(F.col("d") < k).select("u")
-        e = (
-            e.join(low, "u", "left_anti")
-            .join(low.withColumnRenamed("u", "v"), "v", "left_anti")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
+        e = _peel(e, k).localCheckpoint(eager=False)
     return e.groupBy(F.col("u").alias("id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     )
@@ -551,28 +601,13 @@ def kcore_converged(
     """
     if k < 1 or max_rounds < 1:
         raise ValueError(f"k and max_rounds must be >= 1, got {k}, {max_rounds}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e = _fixpoint(
+        _undirected(edges, src, dst).localCheckpoint(eager=False),
+        lambda e: _peel(e, k),
+        DataFrame.count,
+        max_rounds,
+        "kcore_converged",
     )
-    prev = e.count()
-    for _ in range(max_rounds):
-        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        low = deg.filter(F.col("d") < k).select("u")
-        e = (
-            e.join(low, "u", "left_anti")
-            .join(low.withColumnRenamed("u", "v"), "v", "left_anti")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-        cur = e.count()
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"k-core did not converge in {max_rounds} rounds")
     return e.groupBy(F.col("u").alias("id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     )
@@ -644,12 +679,7 @@ def bfs_hops(
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     visited = (
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()
@@ -659,10 +689,7 @@ def bfs_hops(
     frontier = visited.select("id")
     for h in range(1, max_hops + 1):
         nxt = (
-            frontier.join(e, frontier["id"] == e["u"])
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
+            _hop(frontier, e, visited, "id")
             .withColumn("hops", F.lit(h).cast("bigint"))
             .localCheckpoint(eager=False)
         )
@@ -695,12 +722,7 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     labels = (
         e.select(F.col("u").alias("id")).distinct()
         .withColumn("label", F.col("id"))
@@ -814,23 +836,11 @@ def personalized_pagerank(
     pagerank. Seeds usually fit a broadcast; the iteration shuffles
     are the same two node-keyed Exchanges per round.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    with intermediates():
+
+    def seeded(nodes: DataFrame) -> tuple[DataFrame, Column, int]:
         mad = StorageLevel.MEMORY_AND_DISK
-        e = pin(
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
-            mad,
-        )
-        outdeg = pin(e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg")), mad)
-        nodes = pin(
-            e.select(F.col("u").alias("id"))
-            .union(e.select(F.col("v").alias("id")))
-            .distinct(),
-            mad,
-        )
         sd = pin(
             seeds.select(F.col(seeds.columns[0]).alias("id"))
             .distinct()
@@ -841,36 +851,17 @@ def personalized_pagerank(
         n_seeds = sd.count()
         if n_seeds == 0:
             raise ValueError("seeds contain no graph nodes")
-        base = ((damping_den - damping_num) * scale) // damping_den
         flagged = pin(
             nodes.join(F.broadcast(sd), "id", "left").select(
                 "id", F.coalesce("__seed", F.lit(0)).alias("__seed")
             ),
             mad,
         )
-        pr = flagged.select(
-            "id",
-            (F.col("__seed") * F.lit(scale // n_seeds)).cast("long").alias("pr"),
-        )
-        for _ in range(iterations):
-            inbound = (
-                e.join(outdeg, "u")
-                .join(pr.withColumnRenamed("id", "u"), "u")
-                .select(F.col("v").alias("id"), F.expr("pr div odeg").alias("c"))
-                .groupBy("id")
-                .agg(F.sum("c").alias("s"))
-            )
-            pr = flagged.join(inbound, "id", "left").select(
-                "id",
-                (
-                    F.col("__seed").cast("long") * F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(s, 0L)) div {damping_den}"
-                    )
-                ).alias("pr"),
-            )
-        pr = pr.localCheckpoint(eager=True)
-    return pr
+        return flagged, F.col("__seed"), n_seeds
+
+    return _pagerank(
+        edges, src, dst, seeded, iterations, scale, damping_num, damping_den
+    )
 
 
 def neighborhood_function(
@@ -904,12 +895,7 @@ def neighborhood_function(
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     nodes = e.select(F.col("u").alias("id")).distinct()
     visited = (
         nodes.select(F.col("id").alias("s"), F.col("id").alias("n"))
@@ -919,10 +905,7 @@ def neighborhood_function(
     frontier = visited.select("s", "n")
     for h in range(1, max_hops + 1):
         nxt = (
-            frontier.join(e, frontier["n"] == e["u"])
-            .select("s", F.col("v").alias("n"))
-            .distinct()
-            .join(visited.select("s", "n"), ["s", "n"], "left_anti")
+            _hop(frontier, e, visited, "n")
             .withColumn("hop", F.lit(h).cast("int"))
             .localCheckpoint(eager=False)
         )
@@ -1029,12 +1012,7 @@ def hyperball_registers(
         raise ValueError(f"log2m must be in [4, 12], got {log2m}")
     m = 1 << log2m
 
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     nodes = e.select(F.col("u").alias("id")).distinct()
 
     def _coord(col, salt: str):
@@ -1102,20 +1080,9 @@ def cheapest_paths(
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e = (
-        edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v"),
-            F.col(cost).cast("bigint").alias("w"),
-        )
-        .union(
-            edges.select(
-                F.col(dst).alias("u"), F.col(src).alias("v"),
-                F.col(cost).cast("bigint").alias("w"),
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(
+        edges, src, dst, F.col(cost).cast("bigint").alias("w")
+    ).localCheckpoint(eager=False)
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()
@@ -1173,15 +1140,7 @@ def ktruss(
     """
     if k < 3 or rounds < 1:
         raise ValueError(f"need k >= 3 and rounds >= 1, got k={k} rounds={rounds}")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=False)
     for _ in range(rounds):
         tri = triangles(e, "a", "b")
         roles = (
@@ -1341,12 +1300,7 @@ def greedy_matching(
     if rounds < 1:
         raise ValueError(f"need rounds >= 1, got {rounds}")
     e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+        _canonical(edges, src, dst)
         .withColumn(
             "p",
             F.expr(
@@ -1435,12 +1389,7 @@ def betweenness_probe(
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     lvl0 = (
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()

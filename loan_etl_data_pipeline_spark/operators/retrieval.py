@@ -53,6 +53,7 @@ import pyspark.sql.functions as F
 
 from loan_etl_data_pipeline_spark.operators.text import tokens
 from loan_etl_data_pipeline_spark.session import intermediates, pin
+from loan_etl_data_pipeline_spark.sources.tables import _read_parquet
 
 
 def _bm25_score(n_terms: int, idf: list[float], avgdl: float, k1: float, b: float):
@@ -390,7 +391,7 @@ def bm25_topk_indexed(
         for i, t in enumerate(query_terms)
     ]
     per_doc = hits.groupBy("id").agg(*tf_cols)
-    doclens = spark.read.parquet(f"{index_dir}/doclens")
+    doclens = _read_parquet(spark, f"{index_dir}/doclens")
     base = per_doc.join(doclens, "id")
 
     # df per term from the same hits (tiny aggregate)
@@ -421,10 +422,10 @@ def _read_stats(spark, index_dir: str):
     the updater's job, readers stay read-only).
     """
     try:
-        return spark.read.parquet(f"{index_dir}/stats").collect()[0]
+        return _read_parquet(spark, f"{index_dir}/stats").collect()[0]
     except Exception:
         return (
-            spark.read.parquet(f"{index_dir}/doclens")
+            _read_parquet(spark, f"{index_dir}/doclens")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"))
             .collect()[0]
         )
@@ -506,7 +507,7 @@ def update_text_index(
         spark = new_df.sparkSession
         base.select("id", "dl").write.mode("append").parquet(f"{index_dir}/doclens")
         stats = (
-            spark.read.parquet(f"{index_dir}/doclens")
+            _read_parquet(spark, f"{index_dir}/doclens")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"))
         )
         _swap_stats(spark, index_dir, stats)

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from loan_etl_data_pipeline_spark.operators.graph import _undirected
+
 
 def _hash_pick(walk_id, step, node):
     """First 48 md5 bits of 'walk_id|step|node' as bigint — the
@@ -65,11 +67,7 @@ def random_walks(
     """
     if walk_len < 1:
         raise ValueError(f"walk_len must be >= 1, got {walk_len}")
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
+    sym = _undirected(edges, src, dst)
     # Neighbor ranking by ascending id: the index the hash picks into.
     adj = sym.withColumn(
         "idx",
@@ -192,12 +190,7 @@ def node2vec_walks(
     for w in (w_return, w_triangle, w_forward):
         if not isinstance(w, int) or w < 1:
             raise ValueError(f"weights must be positive ints, got {w}")
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=False)
     state = (
         seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("walk_id"))
         .distinct()

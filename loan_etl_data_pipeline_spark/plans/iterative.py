@@ -23,12 +23,11 @@ iterative operator here is hash-driven, not RNG-driven), so a resumed
 run is bit-identical to an uninterrupted one — which is what lets a
 resumable query share the straight-loop SQL oracle.
 
-Cost model: one durable write per round. For state that is small
-relative to the cluster (frontiers, label maps, rank vectors — the
-usual case: state is O(|V|), the data is O(|E|)) this is noise next to
-the round's shuffles; for giant state, raise ``commit_every`` to
-amortize (you re-run at most ``commit_every - 1`` rounds after a
-crash).
+Cost model: one durable write per round, and no schema-inference job
+per reopen (a committed round is a flat Spark-written directory, opened
+through its parquet footer). For state that is small relative to the
+cluster (frontiers, label maps, rank vectors — the usual case: state is
+O(|V|), the data is O(|E|)) this is noise next to the round's shuffles.
 """
 
 from __future__ import annotations
@@ -38,6 +37,8 @@ import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from loan_etl_data_pipeline_spark.sources.tables import _read_parquet
 
 
 def _committed_rounds(state_dir: str) -> list[int]:
@@ -58,11 +59,10 @@ def resumable_loop(
     init: Callable[[], DataFrame],
     step: Callable[[DataFrame, int], DataFrame],
     rounds: int,
-    commit_every: int = 1,
 ) -> DataFrame:
     """Run ``state = step(state, k)`` for k = 1..rounds, committing the
-    state to ``state_dir`` every ``commit_every`` rounds; resume from
-    the newest committed round if one exists. ``init()`` builds the
+    state to ``state_dir`` after every round; resume from the newest
+    committed round if one exists. ``init()`` builds the
     round-0 state (only called when nothing is committed yet). Returns
     the final state as a DataFrame scanning the last committed parquet
     (so the caller's lineage starts at a durable scan, not the whole
@@ -74,8 +74,6 @@ def resumable_loop(
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if commit_every < 1:
-        raise ValueError(f"commit_every must be >= 1, got {commit_every}")
     os.makedirs(state_dir, exist_ok=True)
 
     done = [k for k in _committed_rounds(state_dir) if k <= rounds]
@@ -86,15 +84,9 @@ def resumable_loop(
         # a committed round 0 also resumes from parquet — never re-run
         # init() (on a real corpus the seed scan is the expensive part)
         start = done[-1]
-        state = spark.read.parquet(
-            os.path.join(state_dir, f"round={start:04d}")
-        )
+        state = _read_parquet(spark, os.path.join(state_dir, f"round={start:04d}"))
     for k in range(start + 1, rounds + 1):
-        state = step(state, k)
-        if k % commit_every == 0 or k == rounds:
-            state = _commit(state, state_dir, k)
-        else:
-            state = state.localCheckpoint()
+        state = _commit(step(state, k), state_dir, k)
     return state
 
 
@@ -106,4 +98,4 @@ def _commit(state: DataFrame, state_dir: str, k: int) -> DataFrame:
     marker = os.path.join(state_dir, f"_COMMITTED_{k:04d}")
     with open(marker, "w"):
         pass
-    return state.sparkSession.read.parquet(path)
+    return _read_parquet(state.sparkSession, path)

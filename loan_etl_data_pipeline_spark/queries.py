@@ -17771,15 +17771,11 @@ def q_bfs_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
+    from loan_etl_data_pipeline_spark.operators.graph import _hop, _undirected
     from loan_etl_data_pipeline_spark.plans.iterative import resumable_loop
 
     edges = _copurchase_edges(spark, sf_dir)
-    e = (
-        edges.select(F.col("pa").alias("u"), F.col("pb").alias("v"))
-        .union(edges.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, "pa", "pb").localCheckpoint(eager=False)
 
     def init() -> DataFrame:
         return (
@@ -17792,12 +17788,8 @@ def q_bfs_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def step(state: DataFrame, k: int) -> DataFrame:
         frontier = state.filter(F.col("hops") == k - 1).select("id")
-        nxt = (
-            frontier.join(e, frontier["id"] == e["u"])
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(state.select("id"), "id", "left_anti")
-            .withColumn("hops", F.lit(k).cast("bigint"))
+        nxt = _hop(frontier, e, state, "id").withColumn(
+            "hops", F.lit(k).cast("bigint")
         )
         return state.union(nxt)
 

@@ -30,9 +30,26 @@ def test_long_path_converges(spark):
     assert set(got.values()) == {0}
 
 
-def test_non_convergence_raises(spark):
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _cc(spark, [(i, i + 1) for i in range(12)], max_iter=2)
+_ROUND_CAPS = {
+    "boruvka_msf": {"src": "src", "dst": "dst", "max_rounds": 1},
+    "connected_components": {"max_iter": 2},
+    "connected_components_two_phase": {"max_iter": 1},
+    "kcore_converged": {"k": 2, "max_rounds": 2},
+}
+
+
+@pytest.mark.parametrize("op", sorted(_ROUND_CAPS))
+def test_non_convergence_raises(spark, op):
+    """Every loop with a round cap raises once the cap is hit on a long
+    path (diameter 11; k=2 peels one leaf per end per round; Borůvka
+    needs a last round to see no cross-component edge)."""
+    from loan_etl_data_pipeline_spark.operators import graph
+
+    df = spark.createDataFrame(
+        [(i, i + 1, i) for i in range(12)], "src long, dst long, w long"
+    )
+    with pytest.raises(RuntimeError, match=f"{op} did not converge"):
+        getattr(graph, op)(df, **_ROUND_CAPS[op]).collect()
 
 
 def test_self_loop_and_duplicate_edges(spark):
@@ -335,6 +352,86 @@ def test_personalized_pagerank_proximity(spark):
         personalized_pagerank(
             edges, seeds=spark.createDataFrame([(99,)], ["id"]), iterations=1
         )
+
+
+@pytest.mark.parametrize("iterations", [1, 3, 7])
+def test_pagerank_is_all_seed_personalized_pagerank(spark, iterations):
+    """pagerank == personalized_pagerank with every node a seed; 7
+    iterations crosses pagerank's interval checkpoint."""
+    import random
+
+    from loan_etl_data_pipeline_spark.operators.graph import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    rnd = random.Random(7)
+    pairs = {(rnd.randrange(60), rnd.randrange(60)) for _ in range(240)}
+    edges = spark.createDataFrame(sorted(pairs), "src long, dst long")
+    nodes = edges.select("src").union(edges.select("dst")).distinct()
+    want = sorted(map(tuple, pagerank(edges, iterations=iterations).collect()))
+    got = personalized_pagerank(edges, seeds=nodes, iterations=iterations)
+    assert sorted(map(tuple, got.collect())) == want
+    assert len(want) == nodes.count()
+
+
+# Spark jobs each operator runs (build + collect) on the graph below,
+# measured before the graph loops moved onto the shared helpers; the
+# helpers build the same plans, so the counts must not move.
+# personalized_pagerank ran 31 or 32 jobs from run to run back then too.
+_PINNED_JOBS = {
+    "bfs_hops": (11,),
+    "connected_components": (64,),
+    "connected_components_two_phase": (56,),
+    "kcore": (10,),
+    "kcore_converged": (35,),
+    "neighborhood_function": (15,),
+    "pagerank": (48,),
+    "personalized_pagerank": (31, 32),
+}
+
+
+def test_rewritten_operators_keep_job_counts(spark):
+    from loan_etl_data_pipeline_spark.functions.localframe import values_frame
+    from loan_etl_data_pipeline_spark.operators import graph
+
+    # path 0..9, triangle 20-21-22 with a two-edge tail 22-23-24
+    pairs = [(i, i + 1) for i in range(9)]
+    pairs += [(20, 21), (21, 22), (20, 22), (22, 23), (23, 24)]
+    edges = values_frame(spark, pairs, "src bigint, dst bigint")
+    seeds = values_frame(spark, [(0,), (20,)], "id bigint")
+    calls = {
+        "bfs_hops": lambda: graph.bfs_hops(edges, seeds=seeds, max_hops=3),
+        "connected_components": lambda: graph.connected_components(edges),
+        "connected_components_two_phase": lambda: (
+            graph.connected_components_two_phase(edges)
+        ),
+        "kcore": lambda: graph.kcore(edges, k=2, rounds=2),
+        "kcore_converged": lambda: graph.kcore_converged(edges, k=2),
+        "neighborhood_function": lambda: (
+            graph.neighborhood_function(edges, max_hops=3)
+        ),
+        "pagerank": lambda: graph.pagerank(edges, iterations=7),
+        "personalized_pagerank": lambda: (
+            graph.personalized_pagerank(edges, seeds=seeds, iterations=3)
+        ),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for name, build in calls.items():
+        # a job group per operator: the status store keeps only the
+        # newest spark.ui.retainedJobs jobs, so a plain jobsList delta
+        # goes wrong late in a long session
+        group = f"pinned-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            build().collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    moved = {n: c for n, c in jobs.items() if c not in _PINNED_JOBS[n]}
+    assert not moved, f"job counts moved: {moved}"
 
 
 # ---- Borůvka MSF (boruvka_msf) ----------------------------------------

@@ -109,23 +109,30 @@ def test_uncommitted_round_is_ignored(spark):
     assert calls == [2, 3]  # resumed from round 1, not the torn round 2
 
 
-def test_commit_every_amortizes_markers(spark):
-    init, step = _bfs_parts(spark)
+def test_empty_round_state_commits_and_resumes(spark):
+    """A round whose state has no rows still commits a directory the
+    footer-schema open can read (Spark writes one empty part file
+    carrying the schema), and a resume starts from it."""
+    _, step = _bfs_parts(spark)
+
+    def init():
+        return spark.range(0).select("id", F.lit(0).cast("bigint").alias("hops"))
+
     d = tempfile.mkdtemp()
-    out = resumable_loop(
-        spark, d, init=init, step=step, rounds=3, commit_every=2
-    )
-    assert out.count() > 0
-    markers = sorted(n for n in os.listdir(d) if n.startswith("_COMMITTED_"))
-    # rounds 0 (init), 2 (k % 2 == 0), 3 (final) — round 1 skipped
-    assert markers == ["_COMMITTED_0000", "_COMMITTED_0002", "_COMMITTED_0003"]
+    resumable_loop(spark, d, init=init, step=step, rounds=1).collect()
+    calls = []
+
+    def counting_step(state, k):
+        calls.append(k)
+        return step(state, k)
+
+    out = resumable_loop(spark, d, init=init, step=counting_step, rounds=3)
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,hops:bigint>"
+    assert calls == [2, 3]
 
 
 def test_validates_args(spark):
     init, step = _bfs_parts(spark)
     with pytest.raises(ValueError):
         resumable_loop(spark, tempfile.mkdtemp(), init=init, step=step, rounds=0)
-    with pytest.raises(ValueError):
-        resumable_loop(
-            spark, tempfile.mkdtemp(), init=init, step=step, rounds=1, commit_every=0
-        )
